@@ -3,7 +3,7 @@
     python -m spark_sql_flow_plugin_spark list
     python -m spark_sql_flow_plugin_spark run q1_pricing_summary [--sf DIR] [-n 20]
     python -m spark_sql_flow_plugin_spark lineage q3_shipping_priority \
-        [--contracted] [--format graphviz|mermaid|adjacency_list]
+        [--contracted] [--format graphviz|mermaid|adjacency_list|adjacency]
     python -m spark_sql_flow_plugin_spark catalog-lineage [--contracted]
     python -m spark_sql_flow_plugin_spark provenance q3_shipping_priority revenue
 """
@@ -16,6 +16,8 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .sinks import SINKS
+
     ap = argparse.ArgumentParser(prog="spark_sql_flow_plugin_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -30,8 +32,7 @@ def main(argv: list[str] | None = None) -> int:
     p_lin.add_argument("query")
     p_lin.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
     p_lin.add_argument("--contracted", action="store_true")
-    p_lin.add_argument("--format", default="graphviz",
-                       choices=["graphviz", "mermaid", "adjacency_list"])
+    p_lin.add_argument("--format", default="graphviz", choices=sorted(SINKS))
 
     p_cat = sub.add_parser("catalog-lineage", help="lineage over the session catalog")
     p_cat.add_argument("--contracted", action="store_true")

@@ -14,17 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans import lineage
 from .plans.catalog import catalog_lineage
-from .plans.contracted import extract_contracted_lineage
 from .plans.graph import GraphEdge, GraphNode
-from .plans.lineage import extract_lineage
-from .sinks import AdjacencyListSink, GraphVizSink, MermaidSink
-
-_SINKS = {
-    "graphviz": GraphVizSink,
-    "adjacency_list": AdjacencyListSink,
-    "mermaid": MermaidSink,
-}
+from .sinks import SINKS, GraphVizSink
 
 
 def _resolve_format(fmt):
@@ -32,9 +25,9 @@ def _resolve_format(fmt):
         return GraphVizSink()
     if isinstance(fmt, str):
         try:
-            return _SINKS[fmt]()
+            return SINKS[fmt]()
         except KeyError:
-            raise ValueError(f"unknown graph sink {fmt!r}; expected {sorted(_SINKS)}")
+            raise ValueError(f"unknown graph sink {fmt!r}; expected {sorted(SINKS)}")
     return fmt
 
 
@@ -44,9 +37,7 @@ def extract(
     """(nodes, edges) for a DataFrame's plan or a whole session catalog."""
     if isinstance(target, SparkSession):
         return catalog_lineage(target, contracted=contracted)
-    if contracted:
-        return extract_contracted_lineage(target, flow_name)
-    return extract_lineage(target, flow_name)
+    return lineage.lineage_from_jplan(lineage.dataframe_plan(target), flow_name, contracted)
 
 
 def to_sql_flow_string(
@@ -100,7 +91,7 @@ def column_provenance(df: DataFrame, column: str) -> list[tuple[str, str]]:
     """Source (table, column) pairs feeding one output column of ``df`` —
     contracted-mode closure narrowed to a single column. The
     "where does this number come from" primitive."""
-    nodes, edges = extract_contracted_lineage(df, flow_name="__prov__")
+    nodes, edges = extract(df, contracted=True, flow_name="__prov__")
     by_id = {n.unique_id: n for n in nodes}
     try:
         idx = df.columns.index(column)

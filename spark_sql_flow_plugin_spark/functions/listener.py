@@ -26,6 +26,8 @@ from __future__ import annotations
 import logging
 from datetime import datetime, timezone
 
+from ..plans import lineage
+
 logger = logging.getLogger(__name__)
 
 
@@ -52,22 +54,9 @@ class SQLFlowListener:
                 "durationMs": str(int(durationNs) // 1_000_000),
                 "timestamp": datetime.now(timezone.utc).isoformat(),
             }
-            flow_name = f"query_{abs(qe.hashCode())}"
-            if self.contracted:
-                from ..plans.catalyst import parse_plan_json
-                from ..plans.contracted import contracted_from_tree
-                from ..plans.lineage import annotate_plan
-
-                tree = parse_plan_json(jplan.toJSON())
-                annotate_plan(tree, jplan)
-                nodes, edges = contracted_from_tree(tree, flow_name, jplan=jplan)
-                for n in nodes:
-                    if n.ident == flow_name:
-                        n.props.update(props)
-            else:
-                from ..plans.lineage import extract_lineage_from_jplan
-
-                nodes, edges = extract_lineage_from_jplan(jplan, flow_name, props)
+            nodes, edges = lineage.lineage_from_jplan(
+                jplan, f"query_{abs(qe.hashCode())}", self.contracted, props
+            )
             self.sink.append(nodes, edges, self.output_dir)
             self.captured += 1
         except Exception as exc:  # never propagate into the listener bus
@@ -115,8 +104,8 @@ def register_from_conf(spark) -> SQLFlowListener | None:
     - ``spark.sql.flow.Neo4jAuraSink.{uri,user,password}`` (+ optional
       ``.contracted``) for a Neo4j Aura sink, or
     - ``spark.sql.flow.listener.{sink,outputDir}`` (+ optional
-      ``.contracted``) with sink ∈ {graphviz, adjacency, mermaid} for a
-      file sink,
+      ``.contracted``) with sink a ``sinks.SINKS`` name (e.g. graphviz,
+      adjacency, mermaid) for a file sink,
 
     and every successful query in the session is captured. Returns the
     registered listener, or None when neither conf group is present.
@@ -149,26 +138,16 @@ def register_from_conf(spark) -> SQLFlowListener | None:
         )
         contracted = conf(f"{_NEO4J_CONF_PREFIX}.contracted", "false") == "true"
         # Neo4j appends straight over bolt — no output dir
-        listener = SQLFlowListener(_Neo4jAppendAdapter(sink), "", contracted)
-        from pyspark.java_gateway import ensure_callback_server_started
-
-        ensure_callback_server_started(spark.sparkContext._gateway)
-        spark._jsparkSession.listenerManager().register(listener)
-        return listener
+        return register(spark, _Neo4jAppendAdapter(sink), "", contracted)
 
     sink_name = conf(f"{_LISTENER_CONF_PREFIX}.sink")
     if sink_name is not None:
-        from ..sinks import AdjacencyListSink, GraphVizSink, MermaidSink
+        from ..sinks import SINKS
 
-        sinks = {
-            "graphviz": GraphVizSink,
-            "adjacency": AdjacencyListSink,
-            "mermaid": MermaidSink,
-        }
-        if sink_name not in sinks:
+        if sink_name not in SINKS:
             raise ValueError(
                 f"unknown {_LISTENER_CONF_PREFIX}.sink {sink_name!r}; "
-                f"expected {sorted(sinks)}"
+                f"expected {sorted(SINKS)}"
             )
         out_dir = conf(f"{_LISTENER_CONF_PREFIX}.outputDir")
         if out_dir is None:
@@ -176,7 +155,7 @@ def register_from_conf(spark) -> SQLFlowListener | None:
                 f"{_LISTENER_CONF_PREFIX}.outputDir needs to be specified"
             )
         contracted = conf(f"{_LISTENER_CONF_PREFIX}.contracted", "false") == "true"
-        return register(spark, sinks[sink_name](), out_dir, contracted)
+        return register(spark, SINKS[sink_name](), out_dir, contracted)
     return None
 
 

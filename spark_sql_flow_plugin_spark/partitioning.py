@@ -53,13 +53,14 @@ def _byte_string_as_bytes(raw: str, default: int = 134217728) -> int:
     suffix multiplier. Digit-stripping (the previous implementation)
     parsed '128m' as 128 BYTES, exploding the estimated split count and
     silently disabling the starvation gate on any session that sets the
-    conf with a size suffix."""
+    conf with a size suffix. Fractional values ('1.5g'), which Spark
+    rejects too, get the default."""
     s = str(raw).strip().lower()
     i = len(s)
     while i > 0 and not s[: i][-1].isdigit():
         i -= 1
     num, suffix = s[:i], s[i:].strip()
-    if not num or suffix not in _BYTE_SUFFIXES:
+    if not num.isdigit() or suffix not in _BYTE_SUFFIXES:
         return default
     return int(num) * _BYTE_SUFFIXES[suffix]
 

@@ -8,28 +8,29 @@ For each temp/permanent view in the session catalog:
   registered view collapses to that view's node (shared pipeline segments
   become view references — reference SQLFlow.scala:94-171). Detection uses
   Catalyst's own ``plan.semanticHash()`` via a lockstep walk of the JVM and
-  JSON trees (both are the optimized plan, so pre-order aligns).
+  JSON trees (both are the same analyzed plan, so pre-order aligns).
 - cached subtrees are flagged (lightblue in DOT) via the session
   cacheManager (reference SQLFlow.scala:191-196).
 
-Deviation from the reference: substitution happens on *optimized* plans
-(the reference doctors analyzed plans, then re-optimizes). Self-consistent,
-and avoids re-running the optimizer per view.
+Each view's analyzed plan is parsed with ``catalyst.parse_plan_json``;
+the substitution walk annotates every node it keeps with the same
+``lineage.annotate_node`` the DataFrame/listener path uses, then the tree
+goes to the expanded extractor or ``contracted.contract`` with the view
+node as the sink.
+
+Deviation from the reference: substitution works on *analyzed* plans and
+then splices out the alias/view wrappers, where the reference re-optimizes
+the doctored plan. Self-consistent, and avoids re-running the optimizer per
+view.
 """
 
 from __future__ import annotations
 
-from .catalyst import PlanNode, optimized_plan_tree
-from .graph import GraphEdge, GraphNode, NodeType
-from .lineage import LineageExtractor, jvm_leaf_ident, jvm_leaf_stats
+from . import catalyst
 from . import contracted as contracted_mod
-
-
-def _jvm_preorder(jplan):
-    yield jplan
-    children = jplan.children()
-    for i in range(children.size()):
-        yield from _jvm_preorder(children.apply(i))
+from .catalyst import PlanNode
+from .graph import GraphEdge, GraphNode, NodeType
+from .lineage import LineageExtractor, _rand_id, annotate_node
 
 
 def _is_cached(spark, jplan) -> bool:
@@ -111,9 +112,10 @@ def _substitute_views(
       clause — becomes a named ``name_<id>`` leaf (reference :137-143);
     - any other subtree whose semanticHash equals another view's plan
       collapses to that view (structural reuse), unless blacklisted;
-    - cached subtrees are flagged (``_cached``), leaves annotated with
-      identity + stats, Generate with ``_unrequired``, and subquery
-      expression plans substituted recursively (reference :111-132).
+    - cached subtrees are flagged (``_cached``), every other node gets
+      ``lineage.annotate_node`` (leaf identity + stats, Generate's
+      ``_unrequired``), and subquery expression plans are substituted
+      recursively (reference :111-132).
 
     The reference re-runs the optimizer over the doctored plan; we instead
     splice out the remaining SubqueryAlias/View wrappers afterwards
@@ -139,8 +141,6 @@ def _substitute_views(
                 c = c.children[0]
             if c.cls in ("LocalRelation", "OneRowRelation"):
                 name = _alias_name(p) or c.cls
-                from .lineage import _rand_id
-
                 return _temp_view_leaf(f"{name}_{_rand_id()}", p)
         try:
             h = jp.semanticHash()
@@ -149,37 +149,9 @@ def _substitute_views(
         other = hash_to_view.get(h)
         if other and other != view_name and not _blacklisted_for_hash_sub(p):
             return _temp_view_leaf(other, p)
-        if not p.children:
-            ident = jvm_leaf_ident(jp)
-            if ident:
-                p.raw["_ident"] = ident
-            stats = jvm_leaf_stats(jp)
-            if stats:
-                p.raw["_stats"] = stats
-        if p.cls == "Generate":
-            try:
-                seq = jp.unrequiredChildIndex()
-                p.raw["_unrequired"] = [seq.apply(i) for i in range(seq.size())]
-            except Exception:
-                pass
-        # subquery expression plans: substitute + annotate, cache for the
-        # extractors (reference replaceWithTempViewNodeInSubqueries)
-        subs = []
-        for f in ("condition", "projectList", "aggregateExpressions"):
-            for e in p.exprs(f):
-                subs.extend(e.subquery_plans())
-        if subs:
-            try:
-                jsubs = jp.subqueries()
-                done = []
-                for i, sp in enumerate(subs):
-                    if i < jsubs.size():
-                        done.append(rec(sp, jsubs.apply(i)))
-                    else:
-                        done.append(sp)
-                p.raw["_subplans"] = done
-            except Exception:
-                pass
+        # subquery expression plans go through rec too: substituted and
+        # annotated (reference replaceWithTempViewNodeInSubqueries)
+        annotate_node(p, jp, rec)
         jkids = jp.children()
         p.children = [rec(c, jkids.apply(i)) for i, c in enumerate(p.children)]
         return p
@@ -199,8 +171,6 @@ def _splice_wrappers(p: PlanNode) -> PlanNode:
             child.raw["_cached"] = True
         return child
     return p
-
-
 
 
 def _list_view_names(spark) -> list[str]:
@@ -277,8 +247,6 @@ def catalog_lineage(
     ``SubqueryAlias(name, View)`` nodes there, so substitution is
     structural, and caching (InMemoryRelation) hasn't replaced the
     underlying plan yet, so lineage THROUGH a cached view survives."""
-    from .catalyst import parse_plan_json
-
     views = _list_view_names(spark)
     plans = {}
     hash_to_view: dict[int, str] = {}
@@ -287,7 +255,7 @@ def catalog_lineage(
         if jplan is None:
             continue
         try:
-            plan = parse_plan_json(jplan.toJSON())
+            plan = catalyst.parse_plan_json(jplan.toJSON())
         except Exception:
             continue
         plans[v] = (plan, jplan)
@@ -348,7 +316,7 @@ class _CatalogExtractor(LineageExtractor):
 def _expanded_view(plan: PlanNode):
     """(nodes, edges, per-output-ordinal source list) — each view output
     column has exactly one source: the plan root's same ordinal."""
-    ex = _CatalogExtractor([])
+    ex = _CatalogExtractor()
     root = ex.traverse(plan)
     col_sources = [[(root.unique_id, i)] for i in range(len(root.attribute_names))]
     return list(ex.nodes.values()), ex.edges, col_sources
@@ -358,9 +326,5 @@ def _contracted_view(plan: PlanNode, view_name: str):
     """Leaf nodes only; view output columns trace to source table columns
     through the forward exprId closure, with the same whole-node fallback
     and subquery traversal as query-level contraction."""
-    ex = _CatalogExtractor([])
-    out_map = {eid: i for i, (_, eid) in enumerate(plan.output())}
-    nodes: dict[str, GraphNode] = {}
-    edges: list[GraphEdge] = []
-    contracted_mod._contract_plan(plan, out_map, ex, nodes, edges, view_name, set())
-    return list(nodes.values()), edges, []
+    nodes, edges = contracted_mod.contract(plan, _CatalogExtractor(), view_name)
+    return nodes, edges, []

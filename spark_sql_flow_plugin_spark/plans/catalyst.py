@@ -24,6 +24,12 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
+#: subquery expression classes: each carries its nested plan in field "plan"
+SUBQUERY_EXPR_CLASSES = ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery")
+
+#: plan-node fields whose expressions can hold subquery expressions
+SUBQUERY_FIELDS = ("condition", "projectList", "aggregateExpressions")
+
 # ---------------------------------------------------------------------------
 # Expression trees
 # ---------------------------------------------------------------------------
@@ -60,12 +66,15 @@ class ExprNode:
                 out.append((n.name or "", n.expr_id))
         return out
 
+    def has_subquery(self) -> bool:
+        return any(n.cls in SUBQUERY_EXPR_CLASSES for n in self.walk())
+
     def subquery_plans(self) -> list["PlanNode"]:
         """Nested plans of subquery expressions (ScalarSubquery / Exists /
         ListQuery / LateralSubquery) anywhere under this expression."""
         plans = []
         for n in self.walk():
-            if n.cls in ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery"):
+            if n.cls in SUBQUERY_EXPR_CLASSES:
                 raw_plan = n.raw.get("plan")
                 if isinstance(raw_plan, list) and raw_plan:
                     p = parse_plan_list(raw_plan)
@@ -151,14 +160,6 @@ _HAS_OUTPUT_FIELD = {
     "View",
 }
 
-_LEAF_TABLE_CLASSES = {
-    "LogicalRelation",
-    "LocalRelation",
-    "InMemoryRelation",
-    "HiveTableRelation",
-}
-
-
 @dataclass
 class PlanNode:
     cls: str
@@ -174,6 +175,14 @@ class PlanNode:
 
     def exprs(self, field_name: str) -> list[ExprNode]:
         return _expr_field(self.raw.get(field_name))
+
+    def subquery_plans(self) -> list["PlanNode"]:
+        """Nested plans of every subquery expression in this node's
+        ``SUBQUERY_FIELDS``, field by field and each in pre-order, which is
+        the order the JVM's ``plan.subqueries()`` lists them in."""
+        return [
+            sp for f in SUBQUERY_FIELDS for e in self.exprs(f) for sp in e.subquery_plans()
+        ]
 
     @property
     def join_type(self) -> str:
@@ -273,12 +282,3 @@ def parse_plan_list(flat: list[dict]) -> PlanNode:
 
 def parse_plan_json(plan_json: str) -> PlanNode:
     return parse_plan_list(json.loads(plan_json))
-
-
-def optimized_plan_tree(df) -> PlanNode:
-    """Parse a DataFrame's *optimized* logical plan (one py4j round-trip)."""
-    return parse_plan_json(df._jdf.queryExecution().optimizedPlan().toJSON())
-
-
-def analyzed_plan_tree(df) -> PlanNode:
-    return parse_plan_json(df._jdf.queryExecution().analyzed().toJSON())

@@ -14,25 +14,19 @@ The edge rules mirror the reference's collectEdges (:608-631):
 - subquery plans (ScalarSubquery & friends) are traversed recursively
   (:752-784); their leaf columns reaching the subquery's own output wire
   into the query node as whole-node edges.
+
+The plan tree arrives parsed and annotated, with its query node built, from
+``lineage.lineage_from_jplan`` (DataFrame and listener capture); catalog
+mode calls ``contract`` per view with the view as the sink node.
 """
 
 from __future__ import annotations
 
-from .catalyst import PlanNode, parse_expr_list, parse_plan_list
-from .graph import GraphEdge, GraphNode, NodeType
-from .lineage import (
-    LineageExtractor,
-    _BINARY_COMPARISONS,
-    _rand_id,
-    annotate_leaves,
-    semantic_hash,
-)
-from .catalyst import optimized_plan_tree
+from .catalyst import SUBQUERY_EXPR_CLASSES, PlanNode, parse_expr_list, parse_plan_list
+from .graph import GraphEdge, GraphNode
+from .lineage import _BINARY_COMPARISONS, LineageExtractor
 
 _MAX_DEPTH = 128
-
-#: expression-holding fields that can contain subquery expressions
-_SUBQUERY_FIELDS = ("condition", "projectList", "aggregateExpressions")
 
 
 def _collect_fwd_refs(
@@ -194,17 +188,13 @@ def _filter_comparisons(plan: PlanNode) -> tuple:
         for node in cond.walk():
             if node.cls in _BINARY_COMPARISONS and len(node.children) == 2:
                 a, b = node.children
-                if _expr_has_subquery(a) or _expr_has_subquery(b):
+                if a.has_subquery() or b.has_subquery():
                     continue
                 a_refs = [e for _, e in a.references()]
                 b_refs = [e for _, e in b.references()]
                 if a_refs and b_refs:
                     comps.append((a_refs, b_refs))
     return tuple(comps)
-
-
-def _expr_has_subquery(e) -> bool:
-    return any(n.cls in _SUBQUERY_EXPR_CLASSES for n in e.walk())
 
 
 def _refs_no_subquery(e) -> list[int]:
@@ -218,7 +208,7 @@ def _refs_no_subquery(e) -> list[int]:
     out: list[int] = []
 
     def walk(n) -> None:
-        if n.cls in _SUBQUERY_EXPR_CLASSES:
+        if n.cls in SUBQUERY_EXPR_CLASSES:
             return
         if n.cls == "AttributeReference" and n.expr_id is not None:
             out.append(n.expr_id)
@@ -227,9 +217,6 @@ def _refs_no_subquery(e) -> list[int]:
 
     walk(e)
     return out
-
-
-_SUBQUERY_EXPR_CLASSES = ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery")
 
 
 def _link_filter_subqueries(plan: PlanNode, add) -> None:
@@ -383,14 +370,7 @@ def _iter_subplans(plan: PlanNode):
     (annotate_plan caches the JVM-annotated trees in ``_subplans``)."""
     for p in plan.walk():
         subs = p.raw.get("_subplans")
-        if subs is None:
-            subs = [
-                sub
-                for fieldname in _SUBQUERY_FIELDS
-                for e in p.exprs(fieldname)
-                for sub in e.subquery_plans()
-            ]
-        yield from subs
+        yield from p.subquery_plans() if subs is None else subs
 
 
 def _collect_fwd_all(
@@ -485,39 +465,21 @@ def _contract_plan(
         )
 
 
-def extract_contracted_lineage(
-    df, flow_name: str | None = None
+def contract(
+    plan: PlanNode, ex: LineageExtractor, sink_uid: str
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
-    """Leaf tables + query node only, with direct column edges."""
-    if df.isStreaming:
-        from .catalyst import analyzed_plan_tree
-
-        jplan = df._jdf.queryExecution().analyzed()
-        plan = analyzed_plan_tree(df)
-    else:
-        jplan = df._jdf.queryExecution().optimizedPlan()
-        plan = optimized_plan_tree(df)
-    annotate_leaves(plan, jplan)
-    return contracted_from_tree(plan, flow_name, jplan=jplan)
+    """Leaf nodes of ``plan`` (made by ``ex``) and their column edges into
+    the node ``sink_uid``, whose columns are ``plan``'s output columns."""
+    out_map: dict[int, int | None] = {eid: i for i, (_, eid) in enumerate(plan.output())}
+    nodes: dict[str, GraphNode] = {}
+    edges: list[GraphEdge] = []
+    _contract_plan(plan, out_map, ex, nodes, edges, sink_uid, set())
+    return list(nodes.values()), edges
 
 
 def contracted_from_tree(
-    plan: PlanNode, flow_name: str | None = None, jplan=None
+    plan: PlanNode, qnode: GraphNode
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
-    """Contract an (already annotated) plan tree — shared by the DataFrame
-    path and the listener's JVM-plan path."""
-    ex = LineageExtractor([])
-    qname = flow_name or f"query_{semantic_hash(jplan=jplan)}"
-    out = plan.output()
-    qnode = GraphNode(
-        f"{qname}_{_rand_id()}" if flow_name is None else qname,
-        qname,
-        [n for n, _ in out],
-        ", ".join(n for n, _ in out),
-        NodeType.QUERY,
-    )
-    out_map: dict[int, int | None] = {eid: i for i, (_, eid) in enumerate(out)}
-    nodes: dict[str, GraphNode] = {}
-    edges: list[GraphEdge] = []
-    _contract_plan(plan, out_map, ex, nodes, edges, qnode.unique_id, set())
-    return list(nodes.values()) + [qnode], edges
+    """Contract an annotated plan tree onto its query node."""
+    nodes, edges = contract(plan, LineageExtractor(), qnode.unique_id)
+    return nodes + [qnode], edges

@@ -1,6 +1,17 @@
-"""Expanded-mode column-level lineage extraction.
+"""Plan-level column-level lineage: the one JVM-plan path, plus the
+expanded-mode edge rules.
 
-Python re-expression of the reference's per-operator edge rules
+Every plan-level lineage request — a DataFrame (``api.extract``) or a
+listener capture (``SQLFlowListener``), expanded or contracted — goes
+through ``lineage_from_jplan``: the JVM plan handle's ``toJSON`` is parsed
+into a ``PlanNode`` tree, ``annotate_plan`` attaches what the JSON lacks
+(leaf identity and stats, Generate's dropped columns, subquery plans), one
+query node is built, and the tree goes to ``_extract_from_tree`` (expanded,
+below) or ``contracted.contracted_from_tree``. Catalog mode (catalog.py)
+runs its own view-substitution walk but annotates each node with the same
+``annotate_node``.
+
+Expanded mode re-expresses the reference's per-operator edge rules
 (SQLFlow.scala:357-479 ``collectEdgesInPlan`` + :574-603
 ``traversePlanRecursively`` + :49-59 ``planToSQLFlow``):
 
@@ -27,7 +38,14 @@ from __future__ import annotations
 import hashlib
 import uuid
 
-from .catalyst import ExprNode, PlanNode, optimized_plan_tree, parse_plan_list
+from . import catalyst
+from .catalyst import (
+    SUBQUERY_EXPR_CLASSES,
+    SUBQUERY_FIELDS,
+    PlanNode,
+    parse_expr_list,
+    parse_plan_list,
+)
 from .graph import GraphEdge, GraphNode, NodeType
 
 #: Catalyst BinaryComparison subclasses (SubqueryPredicate matches any,
@@ -40,9 +58,6 @@ _BINARY_COMPARISONS = {
     "GreaterThan",
     "GreaterThanOrEqual",
 }
-
-#: subquery expression node classes (mirrors catalyst.subquery_plans)
-_SUBQUERY_EXPR_CLASSES = ("ScalarSubquery", "Exists", "ListQuery", "LateralSubquery")
 
 _PASSTHROUGH_PANDAS = {
     "FlatMapGroupsInPandas",
@@ -77,14 +92,13 @@ def _rand_id() -> str:
     return uuid.uuid4().hex[:7]
 
 
-def semantic_hash(df=None, jplan=None, fallback: str | None = None) -> str:
-    """7-hex-char SHA-256 of the canonicalized plan (SQLFlow.scala:938-944);
+def semantic_hash(jplan) -> str:
+    """7-hex-char SHA-256 of the canonicalized JVM plan (SQLFlow.scala:938-944);
     dedups semantically-equal plans across queries."""
     try:
-        p = jplan if jplan is not None else df._jdf.queryExecution().optimizedPlan()
-        canon = p.canonicalized().toString()
+        canon = jplan.canonicalized().toString()
     except Exception:
-        canon = fallback or uuid.uuid4().hex
+        canon = uuid.uuid4().hex
     return hashlib.sha256(canon.encode()).hexdigest()[:7]
 
 
@@ -150,26 +164,19 @@ def _jvm_catalog_table(leaf):
         return None
 
 
-def _leaf_idents(df) -> list[str]:
-    """Scan-leaf identities in pre-order (matches the JSON tree's leaf
-    order); empty string → caller falls back to nodeName+id."""
-    try:
-        jleaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        return [jvm_leaf_ident(jleaves.apply(i)) for i in range(jleaves.size())]
-    except Exception:
-        return []
+#: per-run fields of a raw JSON plan: expression ids (AggregateExpression
+#: keeps its own in ``resultId``), JVM object ids, qualifiers, metadata, and
+#: the annotate walk's cached subquery trees (PlanNode objects whose repr
+#: carries all of the former)
+_UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata", "_subplans")
 
 
 def _strip_expr_ids(obj):
-    """Canonicalize a raw JSON plan dict for semantic hashing: drop exprId /
-    jvmId / qualifier / metadata so two runs of the same query hash alike
+    """Canonicalize a raw JSON plan dict for semantic hashing: drop the
+    ``_UNSTABLE_KEYS`` so two runs of the same query hash alike
     (approximates Catalyst's canonicalized-plan hash, SQLFlow.scala:938-944)."""
     if isinstance(obj, dict):
-        return {
-            k: _strip_expr_ids(v)
-            for k, v in obj.items()
-            if k not in ("exprId", "jvmId", "qualifier", "metadata")
-        }
+        return {k: _strip_expr_ids(v) for k, v in obj.items() if k not in _UNSTABLE_KEYS}
     if isinstance(obj, list):
         return [_strip_expr_ids(v) for v in obj]
     return obj
@@ -187,12 +194,9 @@ def plan_semantic_hash(plan: PlanNode) -> str:
 class LineageExtractor:
     """Bottom-up walk of one optimized plan → (nodes, edges)."""
 
-    def __init__(self, leaf_idents: list[str] | None = None):
+    def __init__(self):
         self.nodes: dict[str, GraphNode] = {}
         self.edges: list[GraphEdge] = []
-        self._leaf_idents = list(leaf_idents or [])
-        self._leaf_cursor = 0
-        self._cached_ids: set[str] = set()
 
     # -- node identity (SQLFlow.scala:202-220, 323-333) ----------------------
 
@@ -219,9 +223,6 @@ class LineageExtractor:
         """(unique_id, ident) for a plan node."""
         if plan.is_leaf:
             ident = plan.raw.get("_ident", "")
-            if not ident and self._leaf_cursor < len(self._leaf_idents):
-                ident = self._leaf_idents[self._leaf_cursor]
-            self._leaf_cursor += 1
             if ident:
                 return ident, ident
             return f"{plan.node_name()}_{_rand_id()}", plan.node_name()
@@ -284,8 +285,6 @@ class LineageExtractor:
         elif cls == "Expand":
             # projections is Seq[Seq[Expression]]: JSON list (rows) of lists
             # (exprs) of flat expr-node lists — parse each inner tree directly
-            from .catalyst import parse_expr_list
-
             seen: set[tuple[int, int]] = set()
             for proj_row in plan.raw.get("projections") or []:
                 for i, flat in enumerate(proj_row):
@@ -386,14 +385,11 @@ class LineageExtractor:
                         GraphEdge(sub_root.unique_id, i, node.unique_id, t)
                     )
 
-        def has_subquery(e) -> bool:
-            return any(n.cls in _SUBQUERY_EXPR_CLASSES for n in e.walk())
-
         def walk(n, targets: list[int] | None) -> None:
             if n.cls in _BINARY_COMPARISONS and len(n.children) == 2:
                 # comparison against a subquery: the subquery's columns feed
                 # the outer attributes on the other side of the comparison
-                flags = [has_subquery(c) for c in n.children]
+                flags = [c.has_subquery() for c in n.children]
                 for i, c in enumerate(n.children):
                     if flags[i] and not flags[1 - i]:
                         other_refs = [
@@ -405,14 +401,14 @@ class LineageExtractor:
                     else:
                         walk(c, targets)
                 return
-            if n.cls in _SUBQUERY_EXPR_CLASSES:
+            if n.cls in SUBQUERY_EXPR_CLASSES:
                 raw_plan = n.raw.get("plan")
                 if isinstance(raw_plan, list) and raw_plan:
                     emit(parse_plan_list(raw_plan), targets)
             for c in n.children:
                 walk(c, targets)
 
-        for fieldname in ("condition", "projectList", "aggregateExpressions"):
+        for fieldname in SUBQUERY_FIELDS:
             exprs = plan.exprs(fieldname)
             if fieldname == "condition":
                 for e in exprs:
@@ -422,7 +418,7 @@ class LineageExtractor:
                 # feeds output column j (collectEdgesInExprs, :504-517)
                 for j, e in enumerate(exprs):
                     target = [j] if j < len(plan.output()) else None
-                    walk(e, target if has_subquery(e) else None)
+                    walk(e, target if e.has_subquery() else None)
 
     # -- traversal -------------------------------------------------------------
 
@@ -436,74 +432,70 @@ class LineageExtractor:
 
 
 def _extract_from_tree(
-    plan: PlanNode,
-    leaf_idents: list[str],
-    qname: str,
-    explicit_name: bool,
-    props: dict[str, str] | None = None,
+    plan: PlanNode, qnode: GraphNode
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
-    ex = LineageExtractor(leaf_idents)
+    """Expanded mode: every operator is a node; the root's columns wire 1:1
+    into the query node."""
+    ex = LineageExtractor()
     root = ex.traverse(plan)
-    qnode = GraphNode(
-        qname if explicit_name else f"{qname}_{_rand_id()}",
-        qname,
-        list(root.attribute_names),
-        root.schema_ddl,
-        NodeType.QUERY,
-        props=dict(props or {}),
-    )
     ex.nodes[qnode.unique_id] = qnode
     for i in range(len(root.attribute_names)):
         ex.edges.append(GraphEdge(root.unique_id, i, qnode.unique_id, i))
     return list(ex.nodes.values()), ex.edges
 
 
-def annotate_plan(plan: PlanNode, jplan) -> None:
-    """Lockstep JVM/JSON walk attaching what ``toJSON`` can't express:
+def annotate_node(p: PlanNode, jp, rec) -> None:
+    """Attach to one JSON plan node what ``toJSON`` can't express, read
+    from its JVM twin ``jp``:
 
     - leaves: ``_ident`` (catalog/table/path identity) + ``_stats``;
     - Generate: ``_unrequired`` (``unrequiredChildIndex`` serializes as
-      JSON null, but it decides which child columns survive the operator).
+      JSON null, but it decides which child columns survive the operator);
+    - subquery expression plans: each is paired with its JVM plan from
+      ``jp.subqueries()`` and handed to ``rec(sub, jsub)``; what ``rec``
+      returns is cached in ``_subplans`` so the edge collectors reuse the
+      annotated trees (leaf identity inside subqueries).
 
-    Both trees are the same optimized plan, so pre-order aligns. Subquery
-    expression plans aren't visited (they're expressions on the JVM side).
-    """
+    Shared by ``annotate_plan`` and catalog-mode view substitution; each
+    walks the children itself."""
+    if p.is_leaf:
+        ident = jvm_leaf_ident(jp)
+        if ident:
+            p.raw["_ident"] = ident
+        stats = jvm_leaf_stats(jp)
+        if stats:
+            p.raw["_stats"] = stats
+    if p.cls == "Generate":
+        try:
+            seq = jp.unrequiredChildIndex()
+            p.raw["_unrequired"] = [seq.apply(i) for i in range(seq.size())]
+        except Exception:
+            pass
+    subs = p.subquery_plans()
+    if subs:
+        try:
+            jsubs = jp.subqueries()
+            n = jsubs.size()
+            p.raw["_subplans"] = [
+                rec(sp, jsubs.apply(i)) if i < n else sp for i, sp in enumerate(subs)
+            ]
+        except Exception:
+            pass
 
-    def rec(p: PlanNode, jp) -> None:
-        if p.is_leaf:
-            ident = jvm_leaf_ident(jp)
-            if ident:
-                p.raw["_ident"] = ident
-            stats = jvm_leaf_stats(jp)
-            if stats:
-                p.raw["_stats"] = stats
-        if p.cls == "Generate":
-            try:
-                seq = jp.unrequiredChildIndex()
-                p.raw["_unrequired"] = [seq.apply(i) for i in range(seq.size())]
-            except Exception:
-                pass
-        # subquery expression plans: annotate + cache so the edge collector
-        # reuses the annotated trees (leaf identity inside subqueries)
-        subs = []
-        for f in ("condition", "projectList", "aggregateExpressions"):
-            for e in p.exprs(f):
-                subs.extend(e.subquery_plans())
-        if subs:
-            try:
-                jsubs = jp.subqueries()
-                for i, sp in enumerate(subs):
-                    if i < jsubs.size():
-                        rec(sp, jsubs.apply(i))
-                p.raw["_subplans"] = subs
-            except Exception:
-                pass
+
+def annotate_plan(plan: PlanNode, jplan) -> None:
+    """Lockstep JVM/JSON walk running ``annotate_node`` on every node.
+    Both trees are the same plan, so pre-order aligns."""
+
+    def rec(p: PlanNode, jp) -> PlanNode:
+        annotate_node(p, jp, rec)
         try:
             jkids = jp.children()
             for i, c in enumerate(p.children):
                 rec(c, jkids.apply(i))
         except Exception:
             pass
+        return p
 
     try:
         rec(plan, jplan)
@@ -511,40 +503,40 @@ def annotate_plan(plan: PlanNode, jplan) -> None:
         pass
 
 
-#: backwards-compatible alias (leaf-only annotation grew into a full pass)
-annotate_leaves = annotate_plan
+def dataframe_plan(df):
+    """The JVM plan a DataFrame's lineage is read from: the optimized plan,
+    or for a streaming DataFrame the *analyzed* one (Spark refuses to
+    optimize an un-started streaming query), so streaming lineage is
+    available before ``writeStream.start()``."""
+    qe = df._jdf.queryExecution()
+    return qe.analyzed() if df.isStreaming else qe.optimizedPlan()
 
 
-def extract_lineage(
-    df, flow_name: str | None = None
+def lineage_from_jplan(
+    jplan,
+    flow_name: str | None = None,
+    contracted: bool = False,
+    props: dict[str, str] | None = None,
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
-    """planToSQLFlow equivalent: optimized plan → (plan nodes + query sink
-    node, column edges). The root's columns wire 1:1 into the query node.
+    """The one plan-level lineage path (planToSQLFlow / SQLContractedFlow),
+    shared by DataFrame mode and the listener in both modes: JVM plan
+    handle → parsed, annotated ``PlanNode`` tree → (nodes, edges) ending in
+    a query node that carries ``props``. The query node is ``flow_name``,
+    or ``query_<semantic hash>_<7hex>`` when no name is given."""
+    plan = catalyst.parse_plan_json(jplan.toJSON())
+    annotate_plan(plan, jplan)
+    qname = flow_name or f"query_{semantic_hash(jplan)}"
+    attrs = [name for name, _ in plan.output()]
+    qnode = GraphNode(
+        qname if flow_name is not None else f"{qname}_{_rand_id()}",
+        qname,
+        attrs,
+        ", ".join(attrs),
+        NodeType.QUERY,
+        props=dict(props or {}),
+    )
+    if contracted:
+        from . import contracted as contracted_mod
 
-    Streaming DataFrames use the *analyzed* plan (Spark refuses to optimize
-    an un-started streaming query), so their lineage is available before
-    ``writeStream.start()``."""
-    if df.isStreaming:
-        from .catalyst import analyzed_plan_tree
-
-        jplan = df._jdf.queryExecution().analyzed()
-        plan = analyzed_plan_tree(df)
-    else:
-        jplan = df._jdf.queryExecution().optimizedPlan()
-        plan = optimized_plan_tree(df)
-    annotate_leaves(plan, jplan)
-    qname = flow_name or f"query_{semantic_hash(jplan=jplan)}"
-    return _extract_from_tree(plan, [], qname, flow_name is not None)
-
-
-def extract_lineage_from_jplan(
-    jplan, flow_name: str | None = None, props: dict[str, str] | None = None
-) -> tuple[list[GraphNode], list[GraphEdge]]:
-    """Listener-mode entry: extract from a JVM optimized-plan handle
-    (a QueryExecution's optimizedPlan) instead of a DataFrame."""
-    from .catalyst import parse_plan_json
-
-    plan = parse_plan_json(jplan.toJSON())
-    annotate_leaves(plan, jplan)
-    qname = flow_name or f"query_{semantic_hash(jplan=jplan)}"
-    return _extract_from_tree(plan, [], qname, flow_name is not None, props)
+        return contracted_mod.contracted_from_tree(plan, qnode)
+    return _extract_from_tree(plan, qnode)

@@ -109,6 +109,24 @@ def test_scalar_subquery_traversed(spark):
     assert any(e == f"Aggregate_x:0 -> Filter_x:{q_idx}" for e in es)
 
 
+def test_semantic_hash_stable_across_extractions(spark):
+    # re-analyzing the same SQL mints fresh expression ids; a plan node's
+    # semanticHash must not see them (AggregateExpression's resultId, the
+    # cached subquery trees), or the Neo4j sink never merges its node
+    spark.read.parquet(f"{SF}/lineitem.parquet").createOrReplaceTempView("li_hash")
+    for sql in (
+        "SELECT l_returnflag, sum(l_quantity) AS q FROM li_hash GROUP BY l_returnflag",
+        "SELECT l_orderkey FROM li_hash "
+        "WHERE l_quantity > (SELECT avg(l_quantity) FROM li_hash)",
+    ):
+        runs = [
+            [(n.ident, n.props.get("semanticHash")) for n in extract(spark.sql(sql))[0]]
+            for _ in range(2)
+        ]
+        assert any(h for _, h in runs[0]), sql
+        assert runs[0] == runs[1], sql
+
+
 def test_contracted_single_source(spark):
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     q = (

@@ -12,6 +12,10 @@ shapes, plus the two reference behaviors that only show up live:
 - thread boundary: captures land on the listener-bus thread, so every
   assertion sits behind ``wait_for_listener_bus`` (waitUntilEmpty).
 
+Each seed runs in both modes: an expanded listener is compared with
+direct expanded extraction, a contracted one (its own session) with direct
+contracted extraction.
+
 Edge comparison normalizes ONLY the flow name (the listener names its
 query node ``query_<abs(qe.hashCode())>``; direct extraction gets an
 explicit name) — everything else (plan-node idents, column ordinals)
@@ -42,12 +46,24 @@ class _RaisingSink:
         raise RuntimeError("sink down")
 
 
-@pytest.fixture(scope="module")
-def listener_session(spark, sf_dir):
+def _listener_session(spark, sf_dir, contracted):
     s = spark.newSession()  # isolated temp-view catalog + listenerManager
     register_views(s, sf_dir, *fuzz.FUZZ_TABLES)
     sink = _RecordingSink()
-    lst = L.register(s, sink, "/tmp/unused")
+    lst = L.register(s, sink, "/tmp/unused", contracted=contracted)
+    return s, sink, lst
+
+
+@pytest.fixture(scope="module")
+def listener_session(spark, sf_dir):
+    s, sink, lst = _listener_session(spark, sf_dir, contracted=False)
+    yield s, sink, lst
+    L.unregister(s, lst)
+
+
+@pytest.fixture(scope="module")
+def contracted_listener_session(spark, sf_dir):
+    s, sink, lst = _listener_session(spark, sf_dir, contracted=True)
     yield s, sink, lst
     L.unregister(s, lst)
 
@@ -64,15 +80,23 @@ def _canon(nodes, edges, qname):
     walk-order ident labels (flow name normalized to <Q>)."""
     pos = {n.unique_id: i for i, n in enumerate(nodes)}
     labels = [n.ident.replace(qname, "<Q>") for n in nodes]
+    # whole-node edges carry a None ordinal: sort it as -1
     eset = sorted(
-        (pos[e.from_id], e.from_idx, pos[e.to_id], e.to_idx) for e in edges
+        (pos[e.from_id], e.from_idx, pos[e.to_id], -1 if e.to_idx is None else e.to_idx)
+        for e in edges
     )
     return labels, eset
 
 
-@pytest.mark.parametrize("seed", range(N_SEEDS))
-def test_listener_capture_matches_direct_extraction(listener_session, seed):
-    s, sink, lst = listener_session
+@pytest.mark.parametrize(
+    "seed,contracted",
+    [pytest.param(seed, False, id=str(seed)) for seed in range(N_SEEDS)]
+    + [pytest.param(seed, True, id=f"contracted-{seed}") for seed in range(N_SEEDS)],
+)
+def test_listener_capture_matches_direct_extraction(request, seed, contracted):
+    s, sink, lst = request.getfixturevalue(
+        "contracted_listener_session" if contracted else "listener_session"
+    )
     shape, s_sql, _ = fuzz.gen_pair(seed)
     df = s.sql(s_sql)
     before = len(sink.captures)
@@ -87,7 +111,7 @@ def test_listener_capture_matches_direct_extraction(listener_session, seed):
     # the listener stamps duration + timestamp on the query node
     qnode = next(n for n in cap_nodes if n.ident == cap_q)
     assert "durationMs" in qnode.props and "timestamp" in qnode.props
-    ref_nodes, ref_edges = extract(df, flow_name=f"lf_{seed}")
+    ref_nodes, ref_edges = extract(df, contracted=contracted, flow_name=f"lf_{seed}")
     cap_labels, cap_eset = _canon(cap_nodes, cap_edges, cap_q)
     ref_labels, ref_eset = _canon(ref_nodes, ref_edges, f"lf_{seed}")
     assert cap_labels == ref_labels, (

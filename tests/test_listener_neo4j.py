@@ -284,6 +284,28 @@ def test_register_from_conf_neo4j_missing_keys_raise(spark):
         s.conf.unset("spark.sql.flow.Neo4jAuraSink.uri")
 
 
+def test_register_from_conf_neo4j_registers_contracted_listener(spark):
+    # the sink connects lazily, so registration needs no live database
+    s = spark.newSession()
+    confs = {
+        "uri": "neo4j+s://example",
+        "user": "neo4j",
+        "password": "pw",
+        "contracted": "true",
+    }
+    for k, v in confs.items():
+        s.conf.set(f"spark.sql.flow.Neo4jAuraSink.{k}", v)
+    try:
+        lst = L.register_from_conf(s)
+        assert lst.contracted and lst.output_dir == ""
+        assert isinstance(lst.sink.sink, Neo4jAuraSink)
+        assert lst.sink.sink.uri == "neo4j+s://example"
+        L.unregister(s, lst)
+    finally:
+        for k in confs:
+            s.conf.unset(f"spark.sql.flow.Neo4jAuraSink.{k}")
+
+
 def test_neo4j_write_gated_without_driver():
     sink = Neo4jAuraSink("neo4j+s://example", "neo4j", "pw")
     nodes, edges = _graph()

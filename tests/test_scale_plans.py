@@ -170,6 +170,7 @@ def test_spread_gate_parses_suffixed_maxpartitionbytes():
     # unparseable input falls back to the Spark default, never raises
     assert _byte_string_as_bytes("garbage") == 134217728
     assert _byte_string_as_bytes("") == 134217728
+    assert _byte_string_as_bytes("1.5g") == 134217728
 
 
 def test_size_and_splits_recurses_into_partitioned_layouts(spark, tmp_path):
