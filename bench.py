@@ -85,73 +85,12 @@ def main() -> None:
     for name in run_names:
         if name not in qs:
             raise SystemExit(f"unknown query in SPARK_GRAFT_BENCH_ONLY: {name}")
-        best = float("inf")
-        for _ in range(n_runs):
-            # every run recomputes from parquet: queries that persist()
-            # intermediates would otherwise serve the next run from cache
-            # (CacheManager matches re-built plans by canonical form) and
-            # the "steady state" would measure cache hits, not the engine
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            best = min(best, time.time() - t0)
+        best = min(timed_run(spark, qs[name], sf_dir) for _ in range(n_runs))
         timings[name] = round(best, 3)
 
-    # Data-independent CPU calibration anchor: hash 20M longs through md5 and
-    # aggregate. Round-over-round query deltas can only be interpreted
-    # relative to this number — round 3→4 showed a lockstep ~2x slowdown of
-    # the three cheapest text queries with identical data shapes and
-    # identical physical plans, i.e. host-throughput drift, not a plan
-    # regression. Dividing query time by calibration time normalizes it out.
+    anchors = calibration_anchors(spark, n_runs)
+
     from pyspark.sql import functions as F
-
-    cal = float("inf")
-    for _ in range(n_runs):
-        t0 = time.time()
-        spark.range(0, 20_000_000, 1, 32).select(
-            F.md5(F.col("id").cast("string")).alias("h")
-        ).agg(F.max("h")).collect()
-        cal = min(cal, time.time() - t0)
-
-    # Second anchor, shuffle-bound: the md5 anchor is pure CPU and
-    # over-represents host speedup for mixed JVM/shuffle work (round-5
-    # verdict watch item). 20M longs aggregated over 10M keys defeat
-    # map-side combine (~2 rows/key/partition), so ~20M rows cross the
-    # exchange — serialization, spill files, and fetch dominate.
-    # Interpret shuffle-heavy query deltas against THIS anchor and
-    # CPU-bound ones against the md5 anchor.
-    cal_shuffle = float("inf")
-    for _ in range(n_runs):
-        t0 = time.time()
-        spark.range(0, 20_000_000, 1, 32).groupBy(
-            (F.col("id") % 10_000_000).alias("k")
-        ).agg(F.sum("id").alias("s")).agg(F.max("s")).collect()
-        cal_shuffle = min(cal_shuffle, time.time() - t0)
-
-    # Third anchor, filesystem-metadata-bound: streaming micro-batch
-    # machinery (state-store commits, checkpoint offset/commit logs) is
-    # dominated by many small file creates + fsyncs — a dimension neither
-    # CPU anchor captures (round-9: stream join drifted 1.5x vs r6 while
-    # BOTH CPU anchors improved; the drift lived here). 512 files x 4 KiB,
-    # each fsync'd, in a fresh temp dir on the same filesystem as the
-    # streaming checkpoints (tempfile honors TMPDIR, like Spark's
-    # temporary checkpoint location).
-    import shutil
-    import tempfile
-
-    cal_fsync = float("inf")
-    payload = b"\0" * 4096
-    for _ in range(n_runs):
-        d = tempfile.mkdtemp(prefix="bench_fsync_")
-        t0 = time.time()
-        for i in range(512):
-            p = os.path.join(d, f"f{i}")
-            with open(p, "wb") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-        cal_fsync = min(cal_fsync, time.time() - t0)
-        shutil.rmtree(d, ignore_errors=True)
 
     # Streaming entries pay one-time availableNow micro-batch machinery
     # (checkpoint dir, state-store init across shuffle partitions,
@@ -243,7 +182,6 @@ def main() -> None:
             "data_path_clamped": bool(scaled >= total),
         }
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
             {
@@ -251,12 +189,10 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "sf": sf_value(sf_dir),
                 "runs_per_query": n_runs,
                 "timing": "min over runs (steady-state)",
-                "calibration_md5_20m_sec": round(cal, 3),
-                "calibration_shuffle_20m_sec": round(cal_shuffle, 3),
-                "calibration_fsync_512_sec": round(cal_fsync, 3),
+                **anchors,
                 "spark_version": spark.version,
                 "java_version": spark.sparkContext._jvm.java.lang.System.getProperty(  # noqa: E501
                     "java.version"
@@ -270,6 +206,92 @@ def main() -> None:
         )
     )
     spark.stop()
+
+
+def timed_run(spark, build, sf_dir: str) -> float:
+    """Seconds to build one query and count it, from an empty cache."""
+    # every run recomputes from parquet: queries that persist()
+    # intermediates would otherwise serve the next run from cache
+    # (CacheManager matches re-built plans by canonical form) and
+    # the "steady state" would measure cache hits, not the engine
+    spark.catalog.clearCache()
+    t0 = time.time()
+    build(spark, sf_dir).count()
+    return time.time() - t0
+
+
+def calibration_anchors(spark, n_runs: int) -> dict[str, float]:
+    """The three data-independent calibration anchors, each the minimum
+    over ``n_runs``, keyed as in the bench JSON line. ``bench.main`` runs
+    them after the queries; ``tools/ab.py`` runs them once per round."""
+    # Data-independent CPU calibration anchor: hash 20M longs through md5 and
+    # aggregate. Round-over-round query deltas can only be interpreted
+    # relative to this number — round 3→4 showed a lockstep ~2x slowdown of
+    # the three cheapest text queries with identical data shapes and
+    # identical physical plans, i.e. host-throughput drift, not a plan
+    # regression. Dividing query time by calibration time normalizes it out.
+    from pyspark.sql import functions as F
+
+    cal = float("inf")
+    for _ in range(n_runs):
+        t0 = time.time()
+        spark.range(0, 20_000_000, 1, 32).select(
+            F.md5(F.col("id").cast("string")).alias("h")
+        ).agg(F.max("h")).collect()
+        cal = min(cal, time.time() - t0)
+
+    # Second anchor, shuffle-bound: the md5 anchor is pure CPU and
+    # over-represents host speedup for mixed JVM/shuffle work (round-5
+    # verdict watch item). 20M longs aggregated over 10M keys defeat
+    # map-side combine (~2 rows/key/partition), so ~20M rows cross the
+    # exchange — serialization, spill files, and fetch dominate.
+    # Interpret shuffle-heavy query deltas against THIS anchor and
+    # CPU-bound ones against the md5 anchor.
+    cal_shuffle = float("inf")
+    for _ in range(n_runs):
+        t0 = time.time()
+        spark.range(0, 20_000_000, 1, 32).groupBy(
+            (F.col("id") % 10_000_000).alias("k")
+        ).agg(F.sum("id").alias("s")).agg(F.max("s")).collect()
+        cal_shuffle = min(cal_shuffle, time.time() - t0)
+
+    # Third anchor, filesystem-metadata-bound: streaming micro-batch
+    # machinery (state-store commits, checkpoint offset/commit logs) is
+    # dominated by many small file creates + fsyncs — a dimension neither
+    # CPU anchor captures (round-9: stream join drifted 1.5x vs r6 while
+    # BOTH CPU anchors improved; the drift lived here). 512 files x 4 KiB,
+    # each fsync'd, in a fresh temp dir on the same filesystem as the
+    # streaming checkpoints (tempfile honors TMPDIR, like Spark's
+    # temporary checkpoint location).
+    import shutil
+    import tempfile
+
+    cal_fsync = float("inf")
+    payload = b"\0" * 4096
+    for _ in range(n_runs):
+        d = tempfile.mkdtemp(prefix="bench_fsync_")
+        t0 = time.time()
+        for i in range(512):
+            p = os.path.join(d, f"f{i}")
+            with open(p, "wb") as f:
+                f.write(payload)
+                f.flush()
+                os.fsync(f.fileno())
+        cal_fsync = min(cal_fsync, time.time() - t0)
+        shutil.rmtree(d, ignore_errors=True)
+
+    return {
+        "calibration_md5_20m_sec": round(cal, 3),
+        "calibration_shuffle_20m_sec": round(cal_shuffle, 3),
+        "calibration_fsync_512_sec": round(cal_fsync, 3),
+    }
+
+
+def sf_value(sf_dir: str):
+    """The scale factor a ``.../sf<N>`` directory names, as a number when
+    it parses as one."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
 
 
 if __name__ == "__main__":

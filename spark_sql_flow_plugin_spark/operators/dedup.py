@@ -476,7 +476,8 @@ def dedup_minhash_mllib(spark, sf_dir):
     model = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=4, seed=42
     ).fit(feats)
-    # r17 measured-and-REJECTED (tools/ab_mllibfilter_r17opt.py): the r16
+    # r17 measured-and-REJECTED
+    # (`git show fc9683e:tools/ab_mllibfilter_r17opt.py`): the r16
     # verdict's suggested bucket-sharing pre-filter (restrict both join
     # sides to docs sharing >= 1 LSH bucket — output-invariant since
     # every emitted pair shares a bucket). On this corpus the filter
@@ -1084,7 +1085,8 @@ _NGRAM_GRID_B = 8
 #: match, so it captures overlapping trigrams) and codegen where
 #: transform(sequence...) is interpreted fallback — 1.8x faster on an
 #: isolated extraction microbench, but the FULL query measured ~1 s
-#: WORSE at sf0.1 and neutral at sf1 (tools/ab_cgrams_r17opt.py:
+#: WORSE at sf0.1 and neutral at sf1
+#: (`git show fc9683e:tools/ab_cgrams_r17opt.py`:
 #: RegExpExtractAll materializes a Java String copy of every text per
 #: row, and extraction is a minor share of the query next to the
 #: mask-build and driver round trips).

@@ -626,7 +626,7 @@ def _kcore_peel_frame(spark, sf_dir, rounds: int):
         # consumer — the final degree aggregate — so its checkpoint was a
         # pure extra materialization job + memory write; leaving the one
         # remaining round inline keeps the plan bounded (r16-opt A/B:
-        # tools/ab_kcore_lastckpt_r16opt.py).
+        # `git show fc9683e:tools/ab_kcore_lastckpt_r16opt.py`).
         if r != rounds - 1:
             edges = edges.localCheckpoint()
     out = degree(edges).select(

@@ -24,7 +24,8 @@ from ..sources import load
 # neutral-to-WORSE on the 0.58 MB sf0.1 corpus (r16-opt interleaved A/B —
 # tokenizing 5k docs is cheaper than one added exchange) but the same
 # single starved split carries 10x the CPU at sf1 (5.9 MB), where the
-# gate wins multiples (A/B in tools/ab_textspread_sf1_r16opt.py). 2 MiB
+# gate wins multiples (A/B in
+# `git show fc9683e:tools/ab_textspread_sf1_r16opt.py`). 2 MiB
 # sits between the two measured regimes. The constant lives next to
 # spread() itself since r17 (r16 ADVICE); re-exported here for the
 # existing in-module call sites.

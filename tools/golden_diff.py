@@ -12,19 +12,13 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tests"))
 
-from pyspark.sql import SparkSession
-
 import test_reference_corpus as trc
+
+from spark_sql_flow_plugin_spark.session import get_session
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .appName("golden-diff")
-        .getOrCreate()
-    )
+    spark = get_session("golden-diff", cpus=4)
     only = set(sys.argv[1:])
     for path in trc._FILES:
         name = os.path.basename(path)[:-4]

@@ -1,33 +1,46 @@
 """Per-stage profiler for a single registry query (r13 verdict item #1).
 
-Runs ONE registry query in a session shaped exactly like bench.py's
-(same master/shuffle-partitions/AQE/broadcast confs) but with the Spark
-UI enabled, then dumps the completed stages from the UI REST API sorted
-by executorRunTime — the "name the stage that moved" evidence the
-round-13 verdict asked for on `graph_triangle_count`.
+Runs ONE registry query in bench.py's session (``session.get_session``,
+UI off) and reads the completed stages from Spark's in-process status
+store, sorted by executorRunTime — the "name the stage that moved"
+evidence the round-13 verdict asked for on `graph_triangle_count`.
 
 Usage: python tools/profile_query.py <query_name> [sf_dir] [n_runs]
 
 Prints one line per stage:
     run_ms  cpu_ms  gc_ms  in_MB  sh_read_MB  sh_write_MB  tasks  name
-plus the wall-clock per run. Stage set and run_ms are per-run cumulative
-(the REST API aggregates the app); run N's delta is printed per run.
+plus the wall-clock per run. Each run prints only the stages it added.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _rest(port: int, path: str):
-    with urllib.request.urlopen(f"http://localhost:{port}/api/v1/{path}") as r:
-        return json.loads(r.read())
+_FIELDS = (
+    "stageId", "executorRunTime", "executorCpuTime", "jvmGcTime", "inputBytes",
+    "shuffleReadBytes", "shuffleWriteBytes", "numCompleteTasks", "name",
+)
+
+
+def completed_stages(spark) -> list[dict]:
+    """Every COMPLETE stage in the status store, once the listener bus has
+    delivered all pending events to it."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    it = jsc.statusStore().stageList(None, False, False, no_quantiles, None).iterator()
+    stages = []
+    while it.hasNext():
+        st = it.next()
+        if str(st.status()) == "COMPLETE":
+            stages.append({f: getattr(st, f)() for f in _FIELDS})
+    return stages
 
 
 def main() -> None:
@@ -35,26 +48,10 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from pyspark.sql import SparkSession
-
     from spark_sql_flow_plugin_spark.registry import queries
-    from spark_sql_flow_plugin_spark.session import RUNTIME_CONFS
+    from spark_sql_flow_plugin_spark.session import get_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
-        os.cpu_count() or 8
-    )
-    builder = (
-        SparkSession.builder.appName(f"profile-{name}")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(4, 2 * cpus)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    spark = builder.getOrCreate()
-    for k, v in RUNTIME_CONFS.items():
-        spark.conf.set(k, v)
+    spark = get_session(f"profile-{name}")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = queries()
@@ -64,28 +61,19 @@ def main() -> None:
     for t in ("lineitem", "orders", "documents", "events", "embeddings"):
         load(spark, sf_dir, t)[t].count()
 
-    port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-    app_id = spark.sparkContext.applicationId
-
-    seen: set[int] = set()
-    # drain warm-up stages
-    for st in _rest(port, f"applications/{app_id}/stages"):
-        seen.add(st["stageId"])
+    # skip warm-up stages
+    seen = {st["stageId"] for st in completed_stages(spark)}
 
     for run in range(1, n_runs + 1):
         spark.catalog.clearCache()
         t0 = time.time()
         qs[name](spark, sf_dir).count()
         wall = time.time() - t0
-        time.sleep(1.0)  # let the UI store catch up
         stages = [
-            st
-            for st in _rest(port, f"applications/{app_id}/stages")
-            if st["stageId"] not in seen and st["status"] == "COMPLETE"
+            st for st in completed_stages(spark) if st["stageId"] not in seen
         ]
-        for st in stages:
-            seen.add(st["stageId"])
-        stages.sort(key=lambda s: -s.get("executorRunTime", 0))
+        seen.update(st["stageId"] for st in stages)
+        stages.sort(key=lambda s: -s["executorRunTime"])
         print(f"\n=== run {run}: wall {wall:.2f}s, {len(stages)} stages ===")
         print(
             f"{'stage':>5} {'run_ms':>8} {'cpu_ms':>8} {'gc_ms':>6} "
@@ -94,14 +82,14 @@ def main() -> None:
         for st in stages:
             print(
                 f"{st['stageId']:>5} "
-                f"{st.get('executorRunTime', 0):>8} "
-                f"{st.get('executorCpuTime', 0) // 1_000_000:>8} "
-                f"{st.get('jvmGcTime', 0):>6} "
-                f"{st.get('inputBytes', 0) / 1e6:>7.1f} "
-                f"{st.get('shuffleReadBytes', 0) / 1e6:>7.1f} "
-                f"{st.get('shuffleWriteBytes', 0) / 1e6:>7.1f} "
-                f"{st.get('numCompleteTasks', 0):>5}  "
-                f"{st.get('name', '')[:70]}"
+                f"{st['executorRunTime']:>8} "
+                f"{st['executorCpuTime'] // 1_000_000:>8} "
+                f"{st['jvmGcTime']:>6} "
+                f"{st['inputBytes'] / 1e6:>7.1f} "
+                f"{st['shuffleReadBytes'] / 1e6:>7.1f} "
+                f"{st['shuffleWriteBytes'] / 1e6:>7.1f} "
+                f"{st['numCompleteTasks']:>5}  "
+                f"{st['name'][:70]}"
             )
     spark.stop()
 

@@ -1,6 +1,6 @@
 """Standing registry-wide Spark-side timing sweep (r14 verdict item #3).
 
-Runs EVERY registry query once (plus a warm repeat when --runs 2) at the
+Runs EVERY registry query (min over --runs N runs, default 1) at the
 given sf_dir in a bench-shaped session, and writes
 artifacts/registry_times_r{N}_sf{sf}.json:
 
@@ -16,6 +16,7 @@ Usage: python tools/registry_times.py <round> [sf_dir] [--runs N]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -26,17 +27,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SLOW_LINE_SEC = 5.0
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+def parse_args(argv: list[str]) -> tuple[int, str, int]:
+    """``(round, sf_dir, runs)`` from ``<round> [sf_dir] [--runs N]``."""
+    p = argparse.ArgumentParser(usage="%(prog)s <round> [sf_dir] [--runs N]")
+    p.add_argument("args", nargs="+", help=argparse.SUPPRESS)
+    p.add_argument("--runs", type=int, default=1)
+    ns = p.parse_intermixed_args(argv)
+    args = ns.args
+    if len(args) > 2:
+        p.error(f"unexpected arguments {args[2:]}")
     rnd = int(args[0])
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
-    runs = 2 if "--runs" in " ".join(sys.argv) and "2" in sys.argv[-1] else 1
+    return rnd, sf_dir, ns.runs
+
+
+def main(argv: list[str] | None = None) -> int:
+    rnd, sf_dir, runs = parse_args(sys.argv[1:] if argv is None else argv)
 
     from spark_sql_flow_plugin_spark import registry as _reg
     from spark_sql_flow_plugin_spark.session import get_session
 
     spark = get_session("registry-times", cpus=32)
-    # JVM warmup + CPU anchor (min of 2 post-warmup)
+    # JVM warmup + CPU anchor (min of 2 post-warmup). Not bench's
+    # calibration_anchors: this expression is kept so every round's
+    # anchor_md5_20m_sec stays comparable with the earlier files.
     anchor = 1e9
     for i in range(3):
         t0 = time.time()
