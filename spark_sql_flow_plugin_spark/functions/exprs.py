@@ -8,6 +8,8 @@ oracle SQL strings (see registry docstring).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,10 +25,17 @@ def local_values(spark, rows, schema: str):
     (r17 profile: the two heaviest bm25 stages were these ghost scans).
     A SQL VALUES clause is a LocalRelation: evaluated driver-side, zero
     tasks, broadcast- and fold-friendly. ``schema`` is the familiar
-    "name type, name type" string; every column is cast to the declared
-    type so inferred literal types (INT for small ints) never leak.
-    Rows must be non-empty (VALUES cannot be) — callers with a possibly
-    empty literal keep createDataFrame.
+    "name type, name type" string of unparameterized types; every column
+    is cast to the declared type so inferred literal types (INT for small
+    ints) never leak. Empty ``rows`` give the typed, empty LocalRelation
+    of a one-NULL-row VALUES under ``WHERE false`` (VALUES itself cannot
+    be empty).
+
+    String literals are escaped for the default
+    ``spark.sql.parser.escapedStringLiterals=false`` (backslash escapes
+    are interpreted). Raises ``ValueError`` for a non-finite float (no SQL
+    literal) and for a parameterized type such as ``decimal(10,2)`` or
+    ``array<string>`` (the comma-split schema cannot carry it).
     """
 
     def _lit(v):
@@ -37,17 +46,25 @@ def local_values(spark, rows, schema: str):
         if isinstance(v, str):
             return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         if isinstance(v, float):
+            if not math.isfinite(v):
+                raise ValueError(f"local_values: non-finite float {v!r} has no SQL literal")
             return repr(v) + "D"
         return str(v)
 
     fields = [f.strip().rsplit(None, 1) for f in schema.split(",")]
+    for f in fields:
+        if len(f) != 2 or not f[1].isidentifier():
+            raise ValueError(f"local_values: unsupported schema field {' '.join(f)!r} in {schema!r}")
     names = [n for n, _ in fields]
+    where = ""
+    if not rows:
+        rows, where = [(None,) * len(fields)], " WHERE false"
     vals = ", ".join(
         "(" + ", ".join(_lit(v) for v in row) + ")" for row in rows
     )
     casts = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in fields)
     return spark.sql(
-        f"SELECT {casts} FROM (VALUES {vals}) AS t({', '.join(names)})"
+        f"SELECT {casts} FROM (VALUES {vals}) AS t({', '.join(names)}){where}"
     )
 
 

@@ -68,6 +68,8 @@ from __future__ import annotations
 import random
 from dataclasses import dataclass
 
+from .rows import norm_rows
+
 # TPC-H views the generator draws from (registered by sources.register_views)
 FUZZ_TABLES = (
     "region",
@@ -1601,23 +1603,6 @@ def gen_pair(seed: int, only: str | None = None) -> tuple[str, str, str]:
 # ---------------------------------------------------------------------------
 
 
-def _norm_cell(v):
-    import math
-
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, list):
-        return "[" + ",".join(_norm_cell(x) for x in v) + "]"
-    return repr(v)
-
-
-def _norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(_norm_cell(r[i]) for i in order) for r in rows)
-
-
 def run_seed(spark, con, seed: int, only: str | None = None) -> dict:
     """Run one seed on both engines; views must already be registered.
     Returns a result record; rec["ok"] is the bit-exact verdict."""
@@ -1643,7 +1628,7 @@ def run_seed(spark, con, seed: int, only: str | None = None) -> dict:
     if len(srows) != len(drows):
         rec.update(ok=False, err=f"rows {len(srows)} vs {len(drows)}")
         return rec
-    sn, dn = _norm_rows(scols, srows), _norm_rows(dcols, drows)
+    sn, dn = norm_rows(scols, srows), norm_rows(dcols, drows)
     if sn != dn:
         diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
         rec.update(ok=False, err=f"values differ, e.g. {diff}")

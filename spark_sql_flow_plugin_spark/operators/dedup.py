@@ -174,20 +174,8 @@ def dedup_fingerprint(spark, sf_dir):
 # 2. MinHash + LSH near-dedup
 # ---------------------------------------------------------------------------
 
-# Shingles via slice+zip_with rather than transform+element_at: a lambda that
-# references `toks` by index would have the whole tokenizer expression inlined
-# by CollapseProject and re-evaluated once per loop iteration (measured 30s →
-# 1s at sf0.1 for this rewrite); slice() references evaluate once per row.
-_SPARK_SHINGLES = (
-    "CASE WHEN size(toks) < 3 THEN array() ELSE array_distinct("
-    "  zip_with("
-    "    slice(toks, 1, size(toks) - 2),"
-    "    zip_with(slice(toks, 2, size(toks) - 2), slice(toks, 3, size(toks) - 2),"
-    "             (y, z) -> concat(y, ' ', z)),"
-    "    (x, yz) -> concat(x, ' ', yz)"
-    ")) END"
-)
-_DUCK_SHINGLES = (
+#: DuckDB word-3-gram shingle sets for the minhash CTEs below
+_DUCK_MINHASH_SHINGLES = (
     "CASE WHEN len(toks) < 3 THEN [] ELSE list_distinct(list_transform("
     "  generate_series(1, len(toks) - 2),"
     "  i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])"
@@ -250,7 +238,7 @@ def minhash_signatures(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
 _DUCK_MINHASH_CTES = f"""{DUCK_AUG},
     sets AS (
         SELECT doc_id, shingles FROM (
-            SELECT doc_id, {_DUCK_SHINGLES} AS shingles
+            SELECT doc_id, {_DUCK_MINHASH_SHINGLES} AS shingles
             FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM aug))
         WHERE len(shingles) > 0),
     hashed AS (

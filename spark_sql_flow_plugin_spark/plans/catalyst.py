@@ -102,8 +102,7 @@ def _parse_flat(nodes: list[dict], make) -> object:
         children = [build() for _ in range(n_children)]
         return make(raw, children)
 
-    root = build()
-    return root
+    return build()
 
 
 def _make_expr(raw: dict, children: list[ExprNode]) -> ExprNode:
@@ -205,22 +204,20 @@ class PlanNode:
         if self.cls in _HAS_OUTPUT_FIELD or "output" in self.raw:
             attrs = self.exprs("output")
             if attrs:
-                return [(a.name or "", a.expr_id if a.expr_id is not None else -1) for a in attrs]
+                return [_attr(a) for a in attrs]
         if self.cls == "Project":
-            return [_named(e) for e in self.exprs("projectList")]
+            return [_attr(e, e.cls) for e in self.exprs("projectList")]
         if self.cls == "Aggregate":
-            return [_named(e) for e in self.exprs("aggregateExpressions")]
+            return [_attr(e, e.cls) for e in self.exprs("aggregateExpressions")]
         if self.cls == "Window":
             return self.children[0].output() + [
-                _named(e) for e in self.exprs("windowExpressions")
+                _attr(e, e.cls) for e in self.exprs("windowExpressions")
             ]
         if self.cls in ("BatchEvalPythonUDTF", "ArrowEvalPythonUDTF"):
             # Spark: output = requiredChildOutput ++ resultAttrs (the UDTF
             # eval nodes carry no plain "output" field in toJSON)
             return [
-                (a.name or "", a.expr_id if a.expr_id is not None else -1)
-                for f in ("requiredChildOutput", "resultAttrs")
-                for a in self.exprs(f)
+                _attr(a) for f in ("requiredChildOutput", "resultAttrs") for a in self.exprs(f)
             ]
         if self.cls == "Generate":
             # unrequiredChildIndex serializes as JSON null; the lockstep
@@ -233,11 +230,7 @@ class PlanNode:
             child_out = [
                 a for i, a in enumerate(self.children[0].output()) if i not in unrequired
             ]
-            gen_out = [
-                (a.name or "", a.expr_id if a.expr_id is not None else -1)
-                for a in self.exprs("generatorOutput")
-            ]
-            return child_out + gen_out
+            return child_out + [_attr(a) for a in self.exprs("generatorOutput")]
         if self.cls == "Join":
             jt = self.join_type
             left = self.children[0].output()
@@ -248,7 +241,7 @@ class PlanNode:
                 extra = []
                 if isinstance(exists, list) and exists:
                     a = parse_expr_list(exists)
-                    extra = [(a.name or "exists", a.expr_id if a.expr_id is not None else -1)]
+                    extra = [_attr(a, "exists")]
                 return left + extra
             return left + self.children[1].output()
         if self.cls in ("Union",):
@@ -268,10 +261,11 @@ class PlanNode:
         return self.cls
 
 
-def _named(e: ExprNode) -> tuple[str, int]:
-    """Top-level project/aggregate list entries are NamedExpressions —
-    Alias or AttributeReference — both carry (name, exprId)."""
-    return (e.name or e.cls, e.expr_id if e.expr_id is not None else -1)
+def _attr(e: ExprNode, unnamed: str = "") -> tuple[str, int]:
+    """(name, exprId) of an attribute or a named expression (top-level
+    project/aggregate entries: Alias or AttributeReference); a missing
+    exprId reads -1."""
+    return (e.name or unnamed, e.expr_id if e.expr_id is not None else -1)
 
 
 def parse_plan_list(flat: list[dict]) -> PlanNode:

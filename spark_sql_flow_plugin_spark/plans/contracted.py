@@ -60,16 +60,7 @@ def _collect_fwd_refs(
         # correlation predicates (OuterReference vs inner attr) in THIS
         # filter — inside a subquery plan — link immediately: they are the
         # semi-join condition the optimizer would pull up
-        for cond in plan.exprs("condition"):
-            for node in cond.walk():
-                if node.cls in _BINARY_COMPARISONS and len(node.children) == 2:
-                    o1, i1 = _split_outer_inner(node.children[0])
-                    o2, i2 = _split_outer_inner(node.children[1])
-                    for o in o1 + o2:
-                        add(o, {o})
-                        for i in i1 + i2:
-                            add(o, {o, i})
-                            add(i, {o, i})
+        _link_correlation(plan, add)
 
     for c in plan.children:
         _collect_fwd_refs(c, fwd, child_pending)
@@ -290,7 +281,8 @@ def _link_filter_subqueries(plan: PlanNode, add) -> None:
             elif node.cls in ("Exists", "ScalarSubquery", "ListQuery"):
                 raw_plan = node.raw.get("plan")
                 if isinstance(raw_plan, list) and raw_plan:
-                    _link_correlation(parse_plan_list(raw_plan), add)
+                    for p in parse_plan_list(raw_plan).walk():
+                        _link_correlation(p, add)
 
 
 def _having_shape(p: PlanNode) -> bool:
@@ -323,21 +315,19 @@ def _split_outer_inner(expr) -> tuple[list[int], list[int]]:
     return outer, [e for e in inner if e not in outer]
 
 
-def _link_correlation(subplan: PlanNode, add) -> None:
-    """Outer↔inner links for every correlation comparison inside a subquery
-    plan (comparisons referencing an OuterReference)."""
-    for p in subplan.walk():
-        for cond in p.exprs("condition"):
-            for node in cond.walk():
-                if node.cls in _BINARY_COMPARISONS and len(node.children) == 2:
-                    o1, i1 = _split_outer_inner(node.children[0])
-                    o2, i2 = _split_outer_inner(node.children[1])
-                    outer, inner = o1 + o2, i1 + i2
-                    for o in outer:
-                        add(o, {o})
-                        for i in inner:
-                            add(o, {o, i})
-                            add(i, {o, i})
+def _link_correlation(p: PlanNode, add) -> None:
+    """Outer↔inner links for every correlation comparison in one plan
+    node's condition (comparisons referencing an OuterReference)."""
+    for cond in p.exprs("condition"):
+        for node in cond.walk():
+            if node.cls in _BINARY_COMPARISONS and len(node.children) == 2:
+                o1, i1 = _split_outer_inner(node.children[0])
+                o2, i2 = _split_outer_inner(node.children[1])
+                for o in o1 + o2:
+                    add(o, {o})
+                    for i in i1 + i2:
+                        add(o, {o, i})
+                        add(i, {o, i})
 
 
 def _terminals(eid: int, fwd: dict[int, set[int]]) -> set[int]:
@@ -478,8 +468,8 @@ def contract(
 
 
 def contracted_from_tree(
-    plan: PlanNode, qnode: GraphNode
+    plan: PlanNode, qnode: GraphNode, ex: LineageExtractor
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
     """Contract an annotated plan tree onto its query node."""
-    nodes, edges = contract(plan, LineageExtractor(), qnode.unique_id)
+    nodes, edges = contract(plan, ex, qnode.unique_id)
     return nodes + [qnode], edges

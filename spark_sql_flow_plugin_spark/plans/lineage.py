@@ -30,12 +30,17 @@ Expanded mode re-expresses the reference's per-operator edge rules
 
 Node identity follows SQLFlow.scala:202-220: catalog tables keep their
 qualified name, joins become ``Join_<type>_<7hex>``, every other operator
-``<nodeName>_<7hex>``.
+``<nodeName>_<7hex>``. One plan hash, ``plan_semantic_hash`` (the
+reference's ``semanticHash``, SQLFlow.scala:938-944), gives every plan
+node its ``semanticHash`` prop and an unnamed query its
+``query_<root hash>`` name; it runs once per tree (catalog-mode view reuse
+alone compares Catalyst's own ``semanticHash()``).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import uuid
 
 from . import catalyst
@@ -92,38 +97,34 @@ def _rand_id() -> str:
     return uuid.uuid4().hex[:7]
 
 
-def semantic_hash(jplan) -> str:
-    """7-hex-char SHA-256 of the canonicalized JVM plan (SQLFlow.scala:938-944);
-    dedups semantically-equal plans across queries."""
+def jvm_leaf_meta(leaf) -> tuple[str, dict[str, str]]:
+    """(ident, stats props) of one JVM scan leaf, its CatalogTable
+    (LogicalRelation ``catalogTable(): Option``, HiveTableRelation
+    ``tableMeta()``) looked up once. Ident: catalog table → qualified name;
+    path-based relation → file path; else empty. Props: sizeInBytes /
+    rowCount / createTime from ``LeafNode.computeStats()`` + the
+    catalog-table metadata (reference SQLFlow.scala:288-314, setPlanPropsIn)."""
+    ct = ident = None
     try:
-        canon = jplan.canonicalized().toString()
+        opt = leaf.catalogTable()
+        ct = opt.get() if opt.isDefined() else None
     except Exception:
-        canon = uuid.uuid4().hex
-    return hashlib.sha256(canon.encode()).hexdigest()[:7]
-
-
-def jvm_leaf_ident(leaf) -> str:
-    """Identity of one JVM scan leaf: catalog table → qualified name;
-    path-based relation → file path; else empty."""
-    ct = _jvm_catalog_table(leaf)
-    if ct is not None:
         try:
-            return ct.qualifiedName()
+            ct = leaf.tableMeta()
         except Exception:
             pass
-    try:
-        paths = leaf.relation().location().rootPaths()
-        if paths.size() > 0:
-            return paths.apply(0).toString()
-    except Exception:
-        pass
-    return ""
-
-
-def jvm_leaf_stats(leaf) -> dict[str, str]:
-    """sizeInBytes / rowCount / createTime node props from
-    ``LeafNode.computeStats()`` + the catalog-table metadata (reference
-    SQLFlow.scala:288-314, setPlanPropsIn)."""
+    if ct is not None:
+        try:
+            ident = ct.qualifiedName()
+        except Exception:
+            pass
+    if ident is None:
+        try:
+            paths = leaf.relation().location().rootPaths()
+            if paths.size() > 0:
+                ident = paths.apply(0).toString()
+        except Exception:
+            pass
     props: dict[str, str] = {}
     try:
         stats = leaf.stats()
@@ -133,7 +134,6 @@ def jvm_leaf_stats(leaf) -> dict[str, str]:
             props["rowCount"] = str(rc.get())
     except Exception:
         pass
-    ct = _jvm_catalog_table(leaf)
     if ct is not None:
         try:
             from datetime import datetime, timezone
@@ -146,22 +146,7 @@ def jvm_leaf_stats(leaf) -> dict[str, str]:
             )
         except Exception:
             pass
-    return props
-
-
-def _jvm_catalog_table(leaf):
-    """CatalogTable of a scan leaf: LogicalRelation exposes
-    ``catalogTable(): Option``, HiveTableRelation ``tableMeta()``."""
-    try:
-        ct = leaf.catalogTable()
-        if ct.isDefined():
-            return ct.get()
-    except Exception:
-        pass
-    try:
-        return leaf.tableMeta()
-    except Exception:
-        return None
+    return ident or "", props
 
 
 #: per-run fields of a raw JSON plan: expression ids (AggregateExpression
@@ -174,7 +159,7 @@ _UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata", "_subp
 def _strip_expr_ids(obj):
     """Canonicalize a raw JSON plan dict for semantic hashing: drop the
     ``_UNSTABLE_KEYS`` so two runs of the same query hash alike
-    (approximates Catalyst's canonicalized-plan hash, SQLFlow.scala:938-944)."""
+    (approximates Catalyst's plan canonicalization, SQLFlow.scala:938-944)."""
     if isinstance(obj, dict):
         return {k: _strip_expr_ids(v) for k, v in obj.items() if k not in _UNSTABLE_KEYS}
     if isinstance(obj, list):
@@ -182,13 +167,26 @@ def _strip_expr_ids(obj):
     return obj
 
 
-def plan_semantic_hash(plan: PlanNode) -> str:
-    import json
+def plan_semantic_hash(plan: PlanNode) -> dict[int, str]:
+    """The one plan hash (reference ``semanticHash``, SQLFlow.scala:938-944)
+    of every node in ``plan``'s tree, keyed by ``id(node)``: 7 hex chars of
+    the SHA-256 of ``json.dumps([_strip_expr_ids(p.raw) for p in
+    node.walk()], sort_keys=True, default=str)``. Each node is serialized
+    once; a subtree is a contiguous slice of the pre-order list, joined
+    the way ``json.dumps`` joins a list."""
+    parts: list[bytes] = []
+    hashes: dict[int, str] = {}
 
-    payload = json.dumps(
-        [_strip_expr_ids(p.raw) for p in plan.walk()], sort_keys=True, default=str
-    )
-    return hashlib.sha256(payload.encode()).hexdigest()[:7]
+    def rec(p: PlanNode) -> None:
+        start = len(parts)
+        parts.append(json.dumps(_strip_expr_ids(p.raw), sort_keys=True, default=str).encode())
+        for c in p.children:
+            rec(c)
+        payload = b"[" + b", ".join(parts[start:]) + b"]"
+        hashes[id(p)] = hashlib.sha256(payload).hexdigest()[:7]
+
+    rec(plan)
+    return hashes
 
 
 class LineageExtractor:
@@ -197,6 +195,19 @@ class LineageExtractor:
     def __init__(self):
         self.nodes: dict[str, GraphNode] = {}
         self.edges: list[GraphEdge] = []
+        #: semanticHash by ``id(plan node)``; the hashed trees are kept so
+        #: no id in the table is reused by a later-parsed node
+        self._hashes: dict[int, str] = {}
+        self._hashed: list[PlanNode] = []
+
+    def plan_hash(self, plan: PlanNode) -> str:
+        """``plan``'s semanticHash. A node not yet in the table has its
+        whole subtree hashed in one ``plan_semantic_hash`` pass (for a leaf,
+        just the leaf)."""
+        if id(plan) not in self._hashes:
+            self._hashed.append(plan)
+            self._hashes.update(plan_semantic_hash(plan))
+        return self._hashes[id(plan)]
 
     # -- node identity (SQLFlow.scala:202-220, 323-333) ----------------------
 
@@ -238,7 +249,7 @@ class LineageExtractor:
         schema = ", ".join(attrs)
         node = GraphNode(uid, ident, attrs, schema, self._node_type(plan))
         if node.tpe in (NodeType.PLAN, NodeType.LEAF_PLAN):
-            node.props["semanticHash"] = plan_semantic_hash(plan)
+            node.props["semanticHash"] = self.plan_hash(plan)
         if plan.raw.get("_stats"):
             node.props.update(plan.raw["_stats"])
         self.nodes[uid] = node
@@ -423,6 +434,7 @@ class LineageExtractor:
     # -- traversal -------------------------------------------------------------
 
     def traverse(self, plan: PlanNode) -> GraphNode:
+        self.plan_hash(plan)  # a new tree (plan or subquery) is hashed whole
         child_nodes = [self.traverse(c) for c in plan.children]
         node = self._make_node(plan)
         if plan.children:
@@ -432,11 +444,10 @@ class LineageExtractor:
 
 
 def _extract_from_tree(
-    plan: PlanNode, qnode: GraphNode
+    plan: PlanNode, qnode: GraphNode, ex: LineageExtractor
 ) -> tuple[list[GraphNode], list[GraphEdge]]:
     """Expanded mode: every operator is a node; the root's columns wire 1:1
     into the query node."""
-    ex = LineageExtractor()
     root = ex.traverse(plan)
     ex.nodes[qnode.unique_id] = qnode
     for i in range(len(root.attribute_names)):
@@ -459,10 +470,9 @@ def annotate_node(p: PlanNode, jp, rec) -> None:
     Shared by ``annotate_plan`` and catalog-mode view substitution; each
     walks the children itself."""
     if p.is_leaf:
-        ident = jvm_leaf_ident(jp)
+        ident, stats = jvm_leaf_meta(jp)
         if ident:
             p.raw["_ident"] = ident
-        stats = jvm_leaf_stats(jp)
         if stats:
             p.raw["_stats"] = stats
     if p.cls == "Generate":
@@ -522,10 +532,11 @@ def lineage_from_jplan(
     shared by DataFrame mode and the listener in both modes: JVM plan
     handle → parsed, annotated ``PlanNode`` tree → (nodes, edges) ending in
     a query node that carries ``props``. The query node is ``flow_name``,
-    or ``query_<semantic hash>_<7hex>`` when no name is given."""
+    or ``query_<root semanticHash>_<7hex>`` when no name is given."""
     plan = catalyst.parse_plan_json(jplan.toJSON())
     annotate_plan(plan, jplan)
-    qname = flow_name or f"query_{semantic_hash(jplan)}"
+    ex = LineageExtractor()
+    qname = flow_name or f"query_{ex.plan_hash(plan)}"
     attrs = [name for name, _ in plan.output()]
     qnode = GraphNode(
         qname if flow_name is not None else f"{qname}_{_rand_id()}",
@@ -538,5 +549,5 @@ def lineage_from_jplan(
     if contracted:
         from . import contracted as contracted_mod
 
-        return contracted_mod.contracted_from_tree(plan, qnode)
-    return _extract_from_tree(plan, qnode)
+        return contracted_mod.contracted_from_tree(plan, qnode, ex)
+    return _extract_from_tree(plan, qnode, ex)

@@ -35,6 +35,8 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
+from .rows import norm_rows
+
 __all__ = ["stage_events", "gen_stream_case", "run_stream_seed"]
 
 
@@ -386,10 +388,7 @@ def gen_stream_case(seed: int):
 
 
 def _norm(df: DataFrame) -> list[str]:
-    from .fuzz import _norm_rows
-
-    cols = df.columns
-    return _norm_rows(cols, [tuple(r) for r in df.collect()])
+    return norm_rows(df.columns, [tuple(r) for r in df.collect()])
 
 
 def run_stream_seed(spark, staged, seed: int) -> dict:

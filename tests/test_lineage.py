@@ -3,6 +3,8 @@ node-id random suffixes are normalized (``_<7hex>`` → ``_x``) and the *set*
 of edge strings is compared — node declarations and ordering are not
 (reference SQLFlowTestUtils.scala:43-56)."""
 
+import hashlib
+import json
 import os
 import re
 
@@ -10,6 +12,7 @@ from pyspark.sql import functions as F
 
 from spark_sql_flow_plugin_spark import extract, to_sql_flow_string
 from spark_sql_flow_plugin_spark.functions.tracking import auto_tracking
+from spark_sql_flow_plugin_spark.plans import catalyst, lineage
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -125,6 +128,58 @@ def test_semantic_hash_stable_across_extractions(spark):
         ]
         assert any(h for _, h in runs[0]), sql
         assert runs[0] == runs[1], sql
+
+
+def _reference_node_hash(node) -> str:
+    # the per-node formula plan_semantic_hash must keep byte for byte: the
+    # hashes persist across runs as the Neo4j sink's merge keys
+    payload = json.dumps(
+        [lineage._strip_expr_ids(p.raw) for p in node.walk()], sort_keys=True, default=str
+    )
+    return hashlib.sha256(payload.encode()).hexdigest()[:7]
+
+
+def test_plan_semantic_hash_matches_subtree_formula(spark):
+    spark.read.parquet(f"{SF}/lineitem.parquet").createOrReplaceTempView("li_formula")
+    q = spark.sql(
+        "SELECT l_returnflag, seg, count(*) AS n FROM ("
+        "  SELECT l_returnflag, explode(array(l_linestatus, l_returnflag)) AS seg"
+        "  FROM li_formula"
+        "  WHERE l_quantity > (SELECT avg(l_quantity) FROM li_formula)"
+        ") GROUP BY l_returnflag, seg"
+    )
+    jplan = lineage.dataframe_plan(q)
+    plan = catalyst.parse_plan_json(jplan.toJSON())
+    lineage.annotate_plan(plan, jplan)
+    # the outer plan, then the scalar subquery's annotated tree
+    trees, n_trees, checked = [plan], 0, set()
+    while trees:
+        tree = trees.pop()
+        n_trees += 1
+        hashes = lineage.plan_semantic_hash(tree)
+        for node in tree.walk():
+            assert hashes[id(node)] == _reference_node_hash(node), node.cls
+            checked.add(node.cls)
+            trees.extend(node.raw.get("_subplans") or [])
+    assert n_trees == 2
+    assert {"Aggregate", "Generate", "Filter"} <= checked
+
+
+def test_unnamed_query_named_by_root_hash(spark):
+    spark.read.parquet(f"{SF}/lineitem.parquet").createOrReplaceTempView("li_qname")
+    q = spark.sql(
+        "SELECT l_returnflag, sum(l_quantity) AS q FROM li_qname GROUP BY l_returnflag"
+    )
+    nodes, edges = extract(q)
+    by_uid = {n.unique_id: n for n in nodes}
+    (qnode,) = [n for n in nodes if n.tpe.value == "QueryNode"]
+    (root_uid,) = {e.from_id for e in edges if e.to_id == qnode.unique_id}
+    root_hash = by_uid[root_uid].props["semanticHash"]
+    assert qnode.ident == f"query_{root_hash}"
+    assert re.fullmatch(rf"query_{root_hash}_[0-9a-f]{{7}}", qnode.unique_id)
+    c_nodes, _ = extract(q, contracted=True)
+    (c_qnode,) = [n for n in c_nodes if n.tpe.value == "QueryNode"]
+    assert c_qnode.ident == qnode.ident
 
 
 def test_contracted_single_source(spark):

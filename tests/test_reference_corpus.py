@@ -211,12 +211,15 @@ def _canonicalize(edges: set, mapping: dict[str, str]) -> set:
     return out
 
 
-@pytest.mark.parametrize(
-    "path",
-    [f for f in _FILES if os.path.exists(
+_GOLDEN_FILES = [
+    f for f in _FILES if os.path.exists(
         os.path.join(RESULTS_DIR, os.path.basename(f)[:-4] + "-contracted.sql.dot")
-    )],
-    ids=lambda f: os.path.basename(f)[:-4],
+    )
+]
+
+
+@pytest.mark.parametrize(
+    "path", _GOLDEN_FILES, ids=[os.path.basename(f)[:-4] for f in _GOLDEN_FILES]
 )
 def test_contracted_backbone_matches_reference_golden(corpus_table_session, path):
     """The view/table-level contracted edge set is compared against the

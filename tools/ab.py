@@ -20,10 +20,10 @@ come from the working tree.
 
 Protocol: one session; one untimed warm-up build + count per variant, then
 its rows are collected once (untimed) and canonicalized with the oracle
-gate's ``norm_rows``/``digest``. Then ``--rounds`` rounds: each runs the
-bench calibration anchors first, then every variant in an order rotated by
-one per round. A timed run is bench.py's timed region (clearCache, build,
-count).
+gate's ``rows.norm_rows``/``rows.digest``. Then ``--rounds`` rounds: each
+runs the bench calibration anchors first, then every variant in an order
+rotated by one per round. A timed run is bench.py's timed region
+(clearCache, build, count).
 
 Variants of one registry query (``q``, ``REV:q``) are compared with each
 other, so one run can A/B several queries; a ``module:function`` variant is
@@ -51,7 +51,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 import bench  # noqa: E402
-from check_oracle import digest, norm_rows  # noqa: E402
+from spark_sql_flow_plugin_spark.rows import digest, norm_rows  # noqa: E402
 
 PACKAGE = "spark_sql_flow_plugin_spark"
 

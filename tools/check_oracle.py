@@ -20,8 +20,6 @@ empty-vs-empty agreement. Use at SFs where every query should populate
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
 import sys
 import time
@@ -33,6 +31,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from spark_sql_flow_plugin_spark.registry import all_specs  # noqa: E402
+from spark_sql_flow_plugin_spark.rows import digest, norm_rows  # noqa: E402
 from spark_sql_flow_plugin_spark.session import get_session  # noqa: E402
 from spark_sql_flow_plugin_spark.sources import TABLES  # noqa: E402
 
@@ -49,31 +48,6 @@ PANDAS_FAITHFUL = {
     "DATE",
     "BOOLEAN",
 }
-
-
-def norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # repr() is the shortest string that round-trips the exact double:
-        # bit-exact, no tolerance.
-        return repr(v)
-    if isinstance(v, list):
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
-    return repr(v)
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted("|".join(norm_cell(r[i]) for i in order) for r in rows)
-
-
-def digest(norm):
-    h = hashlib.md5()
-    for line in norm:
-        h.update(line.encode("utf-8", "surrogatepass"))
-        h.update(b"\n")
-    return h.hexdigest()[:12]
 
 
 def main() -> int:
