@@ -13,6 +13,9 @@ Reference behaviors kept:
   (listeners.scala:64-67);
 - query nodes are named ``query_<abs(hash)>``.
 
+Each listener counts its calls by outcome: ``captured``, ``skipped``
+(Command plans) and ``failed`` (any exception, the sink's included).
+
 py4j caveat (SURVEY.md §7 risk 3): callbacks run on the listener-bus thread
 through the py4j ClientServer. PySpark's default gateway supports Python
 callbacks, but under heavy concurrency the pure-Python
@@ -41,7 +44,10 @@ class SQLFlowListener:
         self.sink = sink
         self.output_dir = output_dir
         self.contracted = contracted
+        #: onSuccess calls by outcome
         self.captured = 0
+        self.skipped = 0
+        self.failed = 0
 
     # -- QueryExecutionListener interface -------------------------------------
 
@@ -49,7 +55,8 @@ class SQLFlowListener:
         try:
             jplan = qe.optimizedPlan()
             if "Command" in jplan.getClass().getName():
-                return  # INSERT/DDL lineage is a reference non-goal (Issue#5)
+                self.skipped += 1  # INSERT/DDL lineage is a reference non-goal
+                return
             props = {
                 "durationMs": str(int(durationNs) // 1_000_000),
                 "timestamp": datetime.now(timezone.utc).isoformat(),
@@ -60,6 +67,7 @@ class SQLFlowListener:
             self.sink.append(nodes, edges, self.output_dir)
             self.captured += 1
         except Exception as exc:  # never propagate into the listener bus
+            self.failed += 1
             logger.warning("SQLFlowListener failed to capture lineage: %s", exc)
 
     def onFailure(self, funcName, qe, exception):  # noqa: N802

@@ -115,7 +115,8 @@ def _substitute_views(
     - cached subtrees are flagged (``_cached``), every other node gets
       ``lineage.annotate_node`` (leaf identity + stats, Generate's
       ``_unrequired``), and subquery expression plans are substituted
-      recursively (reference :111-132).
+      recursively (reference :111-132); ``annotate_node`` writes each
+      substituted subquery root back to its expression's memo.
 
     The reference re-runs the optimizer over the doctored plan; we instead
     splice out the remaining SubqueryAlias/View wrappers afterwards

@@ -13,6 +13,11 @@ rebuilds the tree in Python and derives, per node:
 - per-output-expression *references*: the input exprIds each output column
   reads (drives the lineage edge rules in lineage.py).
 
+Fields are parsed lazily and once: ``exprs(field)``, ``output()`` and a
+subquery expression's nested plan (``ExprNode.subquery_plan``) are memoized
+on the node objects, outside ``raw`` (so plan hashing never sees them), and
+annotation, edge rules and contraction all read the same trees.
+
 TreeNode JSON layout: a plan (or expression) tree is a flat JSON array in
 pre-order; each element's ``num-children`` reconstructs the shape. A field
 holding one expression is a flat array of expression dicts; a field holding
@@ -40,6 +45,8 @@ class ExprNode:
     cls: str  # short class name, e.g. "AttributeReference", "Alias"
     raw: dict
     children: list["ExprNode"] = field(default_factory=list)
+    #: a subquery expression's nested plan, once parsed (``subquery_plan``)
+    plan: "PlanNode | None" = field(default=None, repr=False, compare=False)
 
     @property
     def name(self) -> str | None:
@@ -69,21 +76,25 @@ class ExprNode:
     def has_subquery(self) -> bool:
         return any(n.cls in SUBQUERY_EXPR_CLASSES for n in self.walk())
 
-    def subquery_plans(self) -> list["PlanNode"]:
-        """Nested plans of subquery expressions (ScalarSubquery / Exists /
-        ListQuery / LateralSubquery) anywhere under this expression."""
-        plans = []
-        for n in self.walk():
-            if n.cls in SUBQUERY_EXPR_CLASSES:
-                raw_plan = n.raw.get("plan")
-                if isinstance(raw_plan, list) and raw_plan:
-                    p = parse_plan_list(raw_plan)
-                    # contracted mode treats Exists/ListQuery outputs as
-                    # dead (the optimizer's semi/anti-join rewrite discards
-                    # the subquery SELECT list) — tag the flavor
-                    p.raw.setdefault("_sq_kind", n.cls)
-                    plans.append(p)
-        return plans
+    def subquery_plan(self) -> "PlanNode | None":
+        """This subquery expression's (ScalarSubquery / Exists / ListQuery /
+        LateralSubquery) nested plan, parsed on first use and memoized in
+        ``plan``; None for any other expression. Annotation fills the tree
+        in place, and catalog substitution may replace it there."""
+        if self.plan is None and self.cls in SUBQUERY_EXPR_CLASSES:
+            raw_plan = self.raw.get("plan")
+            if isinstance(raw_plan, list) and raw_plan:
+                self.plan = parse_plan_list(raw_plan)
+                # contracted mode treats Exists/ListQuery outputs as dead
+                # (the optimizer's semi/anti-join rewrite discards the
+                # subquery SELECT list) — tag the flavor
+                self.plan.raw.setdefault("_sq_kind", self.cls)
+        return self.plan
+
+    def subqueries(self) -> list["ExprNode"]:
+        """Subquery expressions with a nested plan anywhere under this
+        expression, in pre-order."""
+        return [n for n in self.walk() if n.subquery_plan() is not None]
 
 
 def _short(cls: str) -> str:
@@ -164,6 +175,8 @@ class PlanNode:
     cls: str
     raw: dict
     children: list["PlanNode"] = field(default_factory=list)
+    _exprs: dict = field(default_factory=dict, repr=False, compare=False)
+    _out: list | None = field(default=None, repr=False, compare=False)
 
     def walk(self):
         yield self
@@ -173,15 +186,18 @@ class PlanNode:
     # -- expression accessors ------------------------------------------------
 
     def exprs(self, field_name: str) -> list[ExprNode]:
-        return _expr_field(self.raw.get(field_name))
+        """The expression trees of one JSON field, parsed on first use and
+        memoized (callers share the list and must not mutate it)."""
+        got = self._exprs.get(field_name)
+        if got is None:
+            got = self._exprs[field_name] = _expr_field(self.raw.get(field_name))
+        return got
 
-    def subquery_plans(self) -> list["PlanNode"]:
-        """Nested plans of every subquery expression in this node's
-        ``SUBQUERY_FIELDS``, field by field and each in pre-order, which is
-        the order the JVM's ``plan.subqueries()`` lists them in."""
-        return [
-            sp for f in SUBQUERY_FIELDS for e in self.exprs(f) for sp in e.subquery_plans()
-        ]
+    def subqueries(self) -> list[ExprNode]:
+        """Every subquery expression in this node's ``SUBQUERY_FIELDS``,
+        field by field and each in pre-order, which is the order the JVM's
+        ``plan.subqueries()`` lists their plans in."""
+        return [sq for f in SUBQUERY_FIELDS for e in self.exprs(f) for sq in e.subqueries()]
 
     @property
     def join_type(self) -> str:
@@ -198,7 +214,17 @@ class PlanNode:
 
     def output(self) -> list[tuple[str, int]]:
         """Ordered (name, exprId) this operator emits — Catalyst's
-        ``plan.output`` re-derived from the serialized fields."""
+        ``plan.output`` re-derived from the serialized fields.
+
+        Memoized, so it is computed only once the tree is final: after
+        annotation (Generate's ``_unrequired``) and catalog substitution
+        (rewired ``children``); catalog's ``_temp_view_leaf`` reads it
+        earlier only on a subtree it discards. Callers must not mutate it."""
+        if self._out is None:
+            self._out = self._derive_output()
+        return self._out
+
+    def _derive_output(self) -> list[tuple[str, int]]:
         if "_output" in self.raw:  # synthetic nodes (TempViewNode substitution)
             return list(self.raw["_output"])
         if self.cls in _HAS_OUTPUT_FIELD or "output" in self.raw:
@@ -220,8 +246,8 @@ class PlanNode:
                 _attr(a) for f in ("requiredChildOutput", "resultAttrs") for a in self.exprs(f)
             ]
         if self.cls == "Generate":
-            # unrequiredChildIndex serializes as JSON null; the lockstep
-            # annotate_plan pass recovers it into _unrequired
+            # unrequiredChildIndex serializes as JSON null; annotate_plan
+            # recovers it into _unrequired
             unrequired = set(
                 self.raw.get("_unrequired")
                 or self.raw.get("unrequiredChildIndex")

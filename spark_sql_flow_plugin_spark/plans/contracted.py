@@ -22,7 +22,7 @@ mode calls ``contract`` per view with the view as the sink node.
 
 from __future__ import annotations
 
-from .catalyst import SUBQUERY_EXPR_CLASSES, PlanNode, parse_expr_list, parse_plan_list
+from .catalyst import SUBQUERY_EXPR_CLASSES, PlanNode, parse_expr_list
 from .graph import GraphEdge, GraphNode
 from .lineage import _BINARY_COMPARISONS, LineageExtractor
 
@@ -78,12 +78,10 @@ def _collect_fwd_refs(
             # flows into this projected column (collectEdgesInExprs analog)
             # while remaining a terminal itself (self-loop) so the plain
             # subquery-output → query whole-node edges survive alongside
-            for n in e.walk():
+            for n in e.subqueries():
                 if n.cls == "ScalarSubquery":
-                    raw_plan = n.raw.get("plan")
-                    if isinstance(raw_plan, list) and raw_plan:
-                        for _, seid in parse_plan_list(raw_plan).output():
-                            add(seid, {seid, out_eid})
+                    for _, seid in n.plan.output():
+                        add(seid, {seid, out_eid})
         if cls == "Aggregate":
             # GROUP BY keys that aren't selected still count as referenced
             # (the reference collects grouping refs, so a leaf whose only
@@ -237,24 +235,14 @@ def _link_filter_subqueries(plan: PlanNode, add) -> None:
                 # no link, whole-node edges only. Uncorrelated subqueries
                 # are never rewritten: no link either.
                 for i, side in enumerate(node.children):
-                    sub_nodes = [
-                        n for n in side.walk() if n.cls == "ScalarSubquery"
-                    ]
-                    if not sub_nodes:
-                        continue
-                    other_refs = [
-                        e for _, e in node.children[1 - i].references()
-                    ]
-                    for sq in sub_nodes:
-                        raw_plan = sq.raw.get("plan")
-                        if not (isinstance(raw_plan, list) and raw_plan):
+                    other_refs = [e for _, e in node.children[1 - i].references()]
+                    for sq in side.subqueries():
+                        # no outerAttrs (sq.children): uncorrelated
+                        if sq.cls != "ScalarSubquery" or not sq.children:
                             continue
-                        if not sq.children:  # no outerAttrs: uncorrelated
+                        if _having_shape(sq.plan):
                             continue
-                        sp = parse_plan_list(raw_plan)
-                        if _having_shape(sp):
-                            continue
-                        sub_out = [eid for _, eid in sp.output()]
+                        sub_out = [eid for _, eid in sq.plan.output()]
                         for a in other_refs:
                             add(a, {a})
                             for b in sub_out:
@@ -264,12 +252,8 @@ def _link_filter_subqueries(plan: PlanNode, add) -> None:
                 lq = next((c for c in node.children if c.cls == "ListQuery"), None)
                 values = [c for c in node.children if c.cls != "ListQuery"]
                 sub_out: list[int] = []
-                if lq is not None:
-                    raw_plan = lq.raw.get("plan")
-                    if isinstance(raw_plan, list) and raw_plan:
-                        sub_out = [
-                            eid for _, eid in parse_plan_list(raw_plan).output()
-                        ]
+                if lq is not None and lq.subquery_plan() is not None:
+                    sub_out = [eid for _, eid in lq.plan.output()]
                 for i, v in enumerate(values):
                     v_refs = [e for _, e in v.references()]
                     partners = [sub_out[i]] if i < len(sub_out) else []
@@ -278,11 +262,9 @@ def _link_filter_subqueries(plan: PlanNode, add) -> None:
                         for b in partners:
                             add(a, {a, b})
                             add(b, {a, b})
-            elif node.cls in ("Exists", "ScalarSubquery", "ListQuery"):
-                raw_plan = node.raw.get("plan")
-                if isinstance(raw_plan, list) and raw_plan:
-                    for p in parse_plan_list(raw_plan).walk():
-                        _link_correlation(p, add)
+            elif node.cls in ("Exists", "ScalarSubquery", "ListQuery") and node.subquery_plan():
+                for p in node.plan.walk():
+                    _link_correlation(p, add)
 
 
 def _having_shape(p: PlanNode) -> bool:
@@ -356,11 +338,11 @@ def _terminals(eid: int, fwd: dict[int, set[int]]) -> set[int]:
 
 
 def _iter_subplans(plan: PlanNode):
-    """Subquery expression plans hanging off any operator of ``plan``
-    (annotate_plan caches the JVM-annotated trees in ``_subplans``)."""
+    """Subquery expression plans hanging off any operator of ``plan``: the
+    trees memoized on their expressions, annotated in place."""
     for p in plan.walk():
-        subs = p.raw.get("_subplans")
-        yield from p.subquery_plans() if subs is None else subs
+        for sq in p.subqueries():
+            yield sq.plan
 
 
 def _collect_fwd_all(

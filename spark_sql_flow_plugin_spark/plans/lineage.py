@@ -5,11 +5,14 @@ Every plan-level lineage request — a DataFrame (``api.extract``) or a
 listener capture (``SQLFlowListener``), expanded or contracted — goes
 through ``lineage_from_jplan``: the JVM plan handle's ``toJSON`` is parsed
 into a ``PlanNode`` tree, ``annotate_plan`` attaches what the JSON lacks
-(leaf identity and stats, Generate's dropped columns, subquery plans), one
-query node is built, and the tree goes to ``_extract_from_tree`` (expanded,
-below) or ``contracted.contracted_from_tree``. Catalog mode (catalog.py)
-runs its own view-substitution walk but annotates each node with the same
-``annotate_node``.
+(leaf identity and stats, Generate's dropped columns) in a number of py4j
+calls that grows with the leaves — one ``collectLeaves()`` for every scan,
+child paths only down to Generate and subquery-carrying nodes — and
+annotates each subquery plan in place on the expression that holds it. One
+query node is built, and the tree goes to ``_extract_from_tree``
+(expanded, below) or ``contracted.contracted_from_tree``. Catalog mode
+(catalog.py) runs its own view-substitution walk but annotates each node
+with the same ``annotate_node``.
 
 Expanded mode re-expresses the reference's per-operator edge rules
 (SQLFlow.scala:357-479 ``collectEdgesInPlan`` + :574-603
@@ -44,13 +47,7 @@ import json
 import uuid
 
 from . import catalyst
-from .catalyst import (
-    SUBQUERY_EXPR_CLASSES,
-    SUBQUERY_FIELDS,
-    PlanNode,
-    parse_expr_list,
-    parse_plan_list,
-)
+from .catalyst import SUBQUERY_FIELDS, PlanNode, parse_expr_list
 from .graph import GraphEdge, GraphNode, NodeType
 
 #: Catalyst BinaryComparison subclasses (SubqueryPredicate matches any,
@@ -97,22 +94,26 @@ def _rand_id() -> str:
     return uuid.uuid4().hex[:7]
 
 
-def jvm_leaf_meta(leaf) -> tuple[str, dict[str, str]]:
+def jvm_leaf_meta(leaf, raw: dict) -> tuple[str, dict[str, str]]:
     """(ident, stats props) of one JVM scan leaf, its CatalogTable
     (LogicalRelation ``catalogTable(): Option``, HiveTableRelation
     ``tableMeta()``) looked up once. Ident: catalog table → qualified name;
-    path-based relation → file path; else empty. Props: sizeInBytes /
+    path-based relation → first root path; else empty. Props: sizeInBytes /
     rowCount / createTime from ``LeafNode.computeStats()`` + the
-    catalog-table metadata (reference SQLFlow.scala:288-314, setPlanPropsIn)."""
+    catalog-table metadata (reference SQLFlow.scala:288-314, setPlanPropsIn).
+    ``raw``, the leaf's JSON node, saves the catalog lookup of a
+    LogicalRelation whose JSON has no ``catalogTable`` field: toJSON drops
+    the field exactly when the Option is empty."""
     ct = ident = None
-    try:
-        opt = leaf.catalogTable()
-        ct = opt.get() if opt.isDefined() else None
-    except Exception:
+    if "catalogTable" in raw or not raw.get("class", "").endswith(".LogicalRelation"):
         try:
-            ct = leaf.tableMeta()
+            opt = leaf.catalogTable()
+            ct = opt.get() if opt.isDefined() else None
         except Exception:
-            pass
+            try:
+                ct = leaf.tableMeta()
+            except Exception:
+                pass
     if ct is not None:
         try:
             ident = ct.qualifiedName()
@@ -120,18 +121,16 @@ def jvm_leaf_meta(leaf) -> tuple[str, dict[str, str]]:
             pass
     if ident is None:
         try:
-            paths = leaf.relation().location().rootPaths()
-            if paths.size() > 0:
-                ident = paths.apply(0).toString()
+            ident = leaf.relation().location().rootPaths().mkString("\n").split("\n")[0]
         except Exception:
             pass
     props: dict[str, str] = {}
     try:
         stats = leaf.stats()
         props["sizeInBytes"] = str(stats.sizeInBytes())  # py4j converts BigInt → int
-        rc = stats.rowCount()
-        if rc.isDefined():
-            props["rowCount"] = str(rc.get())
+        rc = stats.rowCount().toString()  # "Some(<n>)" or "None"
+        if rc.startswith("Some("):
+            props["rowCount"] = rc[5:-1]
     except Exception:
         pass
     if ct is not None:
@@ -150,10 +149,8 @@ def jvm_leaf_meta(leaf) -> tuple[str, dict[str, str]]:
 
 
 #: per-run fields of a raw JSON plan: expression ids (AggregateExpression
-#: keeps its own in ``resultId``), JVM object ids, qualifiers, metadata, and
-#: the annotate walk's cached subquery trees (PlanNode objects whose repr
-#: carries all of the former)
-_UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata", "_subplans")
+#: keeps its own in ``resultId``), JVM object ids, qualifiers, metadata
+_UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata")
 
 
 def _strip_expr_ids(obj):
@@ -376,25 +373,9 @@ class LineageExtractor:
           target that expression's output ordinal;
         - anything else: whole-node edges (``to_idx=None``).
 
-        Prefers the annotate_plan-cached subquery trees in ``_subplans``
-        (they carry leaf identities); the cache is consumed in the same
-        field-then-walk order annotate_plan built it in."""
-        cached = plan.raw.get("_subplans")
-        cursor = 0
+        Each subquery expression's plan is the tree memoized on it, which
+        annotation filled in place (leaf identities inside subqueries)."""
         out_map = {eid: i for i, (_, eid) in enumerate(plan.output())}
-
-        def emit(parsed_sp: PlanNode, targets: list[int] | None) -> None:
-            nonlocal cursor
-            sp = parsed_sp
-            if cached is not None and cursor < len(cached):
-                sp = cached[cursor]
-            cursor += 1
-            sub_root = self.traverse(sp)
-            for i in range(len(sub_root.attribute_names)):
-                for t in targets or [None]:
-                    self.edges.append(
-                        GraphEdge(sub_root.unique_id, i, node.unique_id, t)
-                    )
 
         def walk(n, targets: list[int] | None) -> None:
             if n.cls in _BINARY_COMPARISONS and len(n.children) == 2:
@@ -412,10 +393,12 @@ class LineageExtractor:
                     else:
                         walk(c, targets)
                 return
-            if n.cls in SUBQUERY_EXPR_CLASSES:
-                raw_plan = n.raw.get("plan")
-                if isinstance(raw_plan, list) and raw_plan:
-                    emit(parse_plan_list(raw_plan), targets)
+            sp = n.subquery_plan()
+            if sp is not None:
+                sub_root = self.traverse(sp)
+                for i in range(len(sub_root.attribute_names)):
+                    for t in targets or [None]:
+                        self.edges.append(GraphEdge(sub_root.unique_id, i, node.unique_id, t))
             for c in n.children:
                 walk(c, targets)
 
@@ -462,55 +445,85 @@ def annotate_node(p: PlanNode, jp, rec) -> None:
     - leaves: ``_ident`` (catalog/table/path identity) + ``_stats``;
     - Generate: ``_unrequired`` (``unrequiredChildIndex`` serializes as
       JSON null, but it decides which child columns survive the operator);
-    - subquery expression plans: each is paired with its JVM plan from
-      ``jp.subqueries()`` and handed to ``rec(sub, jsub)``; what ``rec``
-      returns is cached in ``_subplans`` so the edge collectors reuse the
-      annotated trees (leaf identity inside subqueries).
+    - subquery expressions: each one's memoized plan is paired with its JVM
+      plan from ``jp.subqueries()`` and handed to ``rec(sub, jsub)``; what
+      ``rec`` returns goes back into the memo, so the edge collectors read
+      the annotated (in catalog mode, substituted) tree.
 
-    Shared by ``annotate_plan`` and catalog-mode view substitution; each
-    walks the children itself."""
+    ``annotate_plan`` calls it on Generate and subquery-carrying nodes (it
+    annotates leaves itself); catalog-mode view substitution on every node
+    it keeps. Neither visits children here."""
     if p.is_leaf:
-        ident, stats = jvm_leaf_meta(jp)
-        if ident:
-            p.raw["_ident"] = ident
-        if stats:
-            p.raw["_stats"] = stats
+        _annotate_leaf(p, jp)
     if p.cls == "Generate":
         try:
             seq = jp.unrequiredChildIndex()
             p.raw["_unrequired"] = [seq.apply(i) for i in range(seq.size())]
         except Exception:
             pass
-    subs = p.subquery_plans()
+    subs = p.subqueries()
     if subs:
         try:
             jsubs = jp.subqueries()
             n = jsubs.size()
-            p.raw["_subplans"] = [
-                rec(sp, jsubs.apply(i)) if i < n else sp for i, sp in enumerate(subs)
-            ]
         except Exception:
-            pass
+            return
+        for i, sq in enumerate(subs[:n]):
+            sq.plan = rec(sq.plan, jsubs.apply(i))
 
 
-def annotate_plan(plan: PlanNode, jplan) -> None:
-    """Lockstep JVM/JSON walk running ``annotate_node`` on every node.
-    Both trees are the same plan, so pre-order aligns."""
+def _annotate_leaf(p: PlanNode, jleaf) -> None:
+    ident, stats = jvm_leaf_meta(jleaf, p.raw)
+    if ident:
+        p.raw["_ident"] = ident
+    if stats:
+        p.raw["_stats"] = stats
 
-    def rec(p: PlanNode, jp) -> PlanNode:
-        annotate_node(p, jp, rec)
-        try:
+
+def annotate_plan(plan: PlanNode, jplan) -> PlanNode:
+    """Annotate ``plan`` from its JVM twin ``jplan`` in O(leaves) py4j
+    calls, and return it:
+
+    - leaves: ``jplan.collectLeaves()`` lists the JVM leaves in pre-order,
+      the order ``plan.walk()`` meets the JSON leaves in; the counts must
+      match (``ValueError`` naming both otherwise), so no leaf is ever
+      paired with its neighbour's identity;
+    - Generate and subquery-carrying nodes: reached from the root by child
+      path, descending only into subtrees that hold one, and given
+      ``annotate_node``; each subquery plan is annotated the same way, in
+      place.
+    """
+    leaves = [p for p in plan.walk() if p.is_leaf]
+    jleaves = jplan.collectLeaves()
+    n = jleaves.size()
+    if n != len(leaves):
+        raise ValueError(
+            f"plan leaves out of step: JVM collectLeaves() has {n}, JSON has {len(leaves)}"
+        )
+    for i, p in enumerate(leaves):
+        _annotate_leaf(p, jleaves.apply(i))
+
+    # ids of the nodes that need their JVM twin, and of their ancestors
+    wanted: set[int] = set()
+
+    def mark(p: PlanNode) -> bool:
+        if any([mark(c) for c in p.children]) or p.cls == "Generate" or p.subqueries():
+            wanted.add(id(p))
+            return True
+        return False
+
+    def rec(p: PlanNode, jp) -> None:
+        if p.cls == "Generate" or p.subqueries():
+            annotate_node(p, jp, annotate_plan)
+        kids = [(i, c) for i, c in enumerate(p.children) if id(c) in wanted]
+        if kids:
             jkids = jp.children()
-            for i, c in enumerate(p.children):
+            for i, c in kids:
                 rec(c, jkids.apply(i))
-        except Exception:
-            pass
-        return p
 
-    try:
+    if mark(plan):
         rec(plan, jplan)
-    except Exception:
-        pass
+    return plan
 
 
 def dataframe_plan(df):

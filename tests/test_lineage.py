@@ -8,6 +8,7 @@ import json
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_sql_flow_plugin_spark import extract, to_sql_flow_string
@@ -160,7 +161,7 @@ def test_plan_semantic_hash_matches_subtree_formula(spark):
         for node in tree.walk():
             assert hashes[id(node)] == _reference_node_hash(node), node.cls
             checked.add(node.cls)
-            trees.extend(node.raw.get("_subplans") or [])
+            trees.extend(sq.plan for sq in node.subqueries())
     assert n_trees == 2
     assert {"Aggregate", "Generate", "Filter"} <= checked
 
@@ -180,6 +181,102 @@ def test_unnamed_query_named_by_root_hash(spark):
     c_nodes, _ = extract(q, contracted=True)
     (c_qnode,) = [n for n in c_nodes if n.tpe.value == "QueryNode"]
     assert c_qnode.ident == qnode.ident
+
+
+class _Seq:
+    """Python stand-in for a py4j Scala Seq."""
+
+    def __init__(self, items):
+        self.items = items
+
+    def size(self):
+        return len(self.items)
+
+    def apply(self, i):
+        return self.items[i]
+
+
+def _multi_join(spark):
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    o = spark.read.parquet(f"{SF}/orders.parquet")
+    li = spark.read.parquet(f"{SF}/lineitem.parquet")
+    n = spark.read.parquet(f"{SF}/nation.parquet")
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .select("c_name", "n_name", "o_orderdate", "l_extendedprice")
+    )
+
+
+def test_annotate_plan_rejects_leaf_count_mismatch(spark):
+    jplan = lineage.dataframe_plan(_multi_join(spark))
+    plan = catalyst.parse_plan_json(jplan.toJSON())
+    jleaves = jplan.collectLeaves()
+    n = jleaves.size()
+
+    class OneShort:
+        def collectLeaves(self):
+            return _Seq([jleaves.apply(i) for i in range(n - 1)])
+
+    with pytest.raises(ValueError, match=rf"has {n - 1}, JSON has {n}\b"):
+        lineage.annotate_plan(plan, OneShort())
+    # nothing was paired off by one
+    assert not any("_ident" in p.raw or "_stats" in p.raw for p in plan.walk())
+
+
+def test_annotate_plan_py4j_budget(spark, monkeypatch):
+    # leaves come from one collectLeaves(); a plan with no Generate and no
+    # subquery never walks children over py4j
+    jplan = lineage.dataframe_plan(_multi_join(spark))
+    plan = catalyst.parse_plan_json(jplan.toJSON())
+    n_leaves = sum(1 for p in plan.walk() if p.is_leaf)
+    assert n_leaves == 4
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):  # object detach on Python GC
+            sent.append(command.split("\n", 3)[:3])
+        return orig(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    lineage.annotate_plan(plan, jplan)
+    monkeypatch.undo()
+    methods = [parts[2] for parts in sent if parts[0] == "c" and len(parts) > 2]
+    assert "children" not in methods
+    assert len(sent) <= 10 * n_leaves + 2, methods
+    assert all(p.raw.get("_ident", "").endswith(".parquet") for p in plan.walk() if p.is_leaf)
+
+
+def test_plan_parses_once(spark, monkeypatch):
+    spark.read.parquet(f"{SF}/lineitem.parquet").createOrReplaceTempView("li_once")
+    spark.read.parquet(f"{SF}/orders.parquet").createOrReplaceTempView("ord_once")
+    q = spark.sql(
+        "SELECT l_orderkey, l_quantity * (SELECT max(o_totalprice) FROM ord_once) AS v "
+        "FROM li_once WHERE l_quantity > (SELECT avg(l_quantity) FROM li_once)"
+    )
+    plan = catalyst.parse_plan_json(lineage.dataframe_plan(q).toJSON())
+    project = next(p for p in plan.walk() if p.cls == "Project")
+    assert project.exprs("projectList") is project.exprs("projectList")
+
+    parsed: dict[int, int] = {}
+    orig = catalyst.parse_plan_list
+
+    def counting(flat):
+        parsed[id(flat)] = parsed.get(id(flat), 0) + 1
+        return orig(flat)
+
+    monkeypatch.setattr(catalyst, "parse_plan_list", counting)
+    graphs = [extract(q), extract(q, contracted=True)]
+    monkeypatch.undo()
+    # per extraction: the plan and its two subquery plans, each parsed once
+    assert sorted(parsed.values()) == [1] * 6
+    # the subquery's scan keeps its table identity in both modes
+    for nodes, _ in graphs:
+        idents = {n.ident for n in nodes if n.tpe.value == "TableNode"}
+        assert any(i.endswith("orders.parquet") for i in idents), idents
 
 
 def test_contracted_single_source(spark):
@@ -223,6 +320,29 @@ def test_catalog_mode_view_substitution(spark):
         seen.add(cur)
         frontier |= adj.get(cur, set())
     assert "cat_v2" in seen, "cat_v1 must flow into cat_v2"
+
+
+def test_catalog_contracted_correlated_subquery_over_view(spark):
+    # the subquery's reference to hv_agg is substituted by the view node
+    # before contraction, as the reference does before re-optimizing, so
+    # the view's Aggregate is no HAVING and the correlated comparison links
+    # hv_agg.s to o_totalprice, as DataFrame-mode contraction of the same
+    # plan links lineitem.l_quantity to it
+    s = spark.newSession()
+    s.read.parquet(f"{SF}/lineitem.parquet").createOrReplaceTempView("hv_li")
+    s.read.parquet(f"{SF}/orders.parquet").createOrReplaceTempView("hv_o")
+    s.sql(
+        "CREATE OR REPLACE TEMP VIEW hv_agg AS "
+        "SELECT l_orderkey AS k, sum(l_quantity) AS s FROM hv_li GROUP BY l_orderkey"
+    )
+    s.sql(
+        "CREATE OR REPLACE TEMP VIEW hv_q AS SELECT o_orderkey, o_totalprice FROM hv_o "
+        "WHERE o_totalprice > (SELECT max(s) FROM hv_agg WHERE hv_agg.k = hv_o.o_orderkey)"
+    )
+    _, edges = extract(s, contracted=True)
+    assert "hv_agg:1 -> hv_q:1" in edge_set(edges)
+    _, df_edges = extract(s.table("hv_q"), contracted=True, flow_name="flow")
+    assert "lineitem:4 -> flow:1" in edge_set(df_edges)
 
 
 def test_catalog_mode_permanent_view(spark):

@@ -126,9 +126,11 @@ def test_listener_capture_matches_direct_extraction(request, seed, contracted):
 def test_listener_skips_commands(listener_session):
     s, sink, lst = listener_session
     before = len(sink.captures)
+    skipped = lst.skipped
     s.sql("CREATE OR REPLACE TEMPORARY VIEW _listener_cmd AS SELECT 1 AS a")
     L.wait_for_listener_bus(s)
     assert len(sink.captures) == before, "Command plan must be skipped"
+    assert lst.skipped == skipped + 1
     # ... and the listener still captures the next real query
     s.sql("SELECT a FROM _listener_cmd").collect()
     L.wait_for_listener_bus(s)
@@ -144,6 +146,33 @@ def test_listener_swallows_sink_errors(spark, sf_dir):
         rows = s.sql(s_sql).collect()  # must not raise despite the sink
         L.wait_for_listener_bus(s)
         assert lst.captured == 0, "a raising sink must not count as captured"
-        assert rows is not None
+        assert (lst.failed, lst.skipped) == (1, 0)
+        assert len(rows) == s.sql(s_sql).count()
+    finally:
+        L.unregister(s, lst)
+
+
+def test_listener_counts_failed_extraction(spark, sf_dir, monkeypatch):
+    # a plan the annotate guard rejects fails its capture, not its query
+    from spark_sql_flow_plugin_spark.plans import lineage
+
+    def out_of_step(plan, jplan):
+        raise ValueError("plan leaves out of step")
+
+    s = spark.newSession()
+    register_views(s, sf_dir, *fuzz.FUZZ_TABLES)
+    sink = _RecordingSink()
+    lst = L.register(s, sink, "/tmp/unused")
+    try:
+        monkeypatch.setattr(lineage, "annotate_plan", out_of_step)
+        _, s_sql, _ = fuzz.gen_pair(7)
+        rows = s.sql(s_sql).collect()
+        L.wait_for_listener_bus(s)
+        assert (lst.captured, lst.failed) == (0, 1)
+        assert not sink.captures
+        monkeypatch.undo()
+        assert len(rows) == s.sql(s_sql).count()
+        L.wait_for_listener_bus(s)
+        assert (lst.captured, lst.failed) == (1, 1)
     finally:
         L.unregister(s, lst)
