@@ -1743,18 +1743,32 @@ def quality_train_logreg(spark, sf_dir):
 # bigram array (`aggregate`), so the whole filter runs with ZERO shuffles
 # and stays in whole-stage codegen. The oracle uses the equivalent
 # explode + GROUP BY formulation (clearer in SQL; the oracle is a
-# correctness mirror, not the scale path).
+# correctness mirror, not the scale path). No lambda body may reference the
+# token array: a consumer's filter on these columns (the curation
+# pipeline's `keep == 1`) makes the optimizer inline the `toks` alias into
+# every expression that reads it, and inside a lambda body that copy of the
+# tokenizer runs once per array element — O(n_words^2) per row. `toks` may
+# appear only as the array argument of a higher-order function.
 # ---------------------------------------------------------------------------
 
 _GOPHER_STOPS_SQL = _SW_LIST_SQL  # same 8-word stopword set as quality_score
 
 # Bigram mode, row-locally: sort the bigram array, then one fold that
 # tracks (prev value, current run, best run). No explode, no shuffle.
-# Shared by quality_gopher_rules and curation_filter_funnel.
+# Shared by quality_gopher_rules, curation_filter_funnel and
+# stream_quality_gate. The bigrams zip the token array with itself shifted
+# by one, so the lambda sees only the two elements and never `toks` (see
+# the scale posture above); the size guard is part of the expression
+# because slice() rejects the negative length an empty row would give.
 _GOPHER_BIGRAMS = (
-    "transform(sequence(1, size(toks) - 1), "
-    "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
+    "IF(size(toks) >= 2, "
+    "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1), "
+    "(a, b) -> concat(a, ' ', b)), array())"
 )
+# Distinct stopwords present in the row: array_intersect returns distinct
+# elements and _STOPWORDS has no duplicates, so this counts the stopword
+# hits without a lambda over `toks`.
+_GOPHER_STOP_HITS = f"size(array_intersect(array({_SW_LIST_SQL}), toks))"
 _GOPHER_TOP_FOLD = (
     "aggregate(array_sort(bgs), "
     "named_struct('prev', cast(null as string), 'run', 0, 'best', 0), "
@@ -1818,19 +1832,16 @@ def quality_gopher_rules(spark, sf_dir):
         min_bytes=_SPREAD_MIN_BYTES,
     )
     t = d.select("doc_id", F.expr(_SPARK_WTOKS).alias("toks"))
-    bigrams, top_cnt_fold = _GOPHER_BIGRAMS, _GOPHER_TOP_FOLD
     c = t.where(F.size("toks") > 0).select(
         "doc_id",
         F.size("toks").alias("n_words"),
         F.expr("aggregate(toks, 0L, (a, x) -> a + length(x))").alias("sum_len"),
         F.expr("size(filter(toks, x -> x rlike '[a-z]'))").alias("n_alpha_words"),
-        F.expr(
-            f"size(filter(array({_SW_LIST_SQL}), s -> array_contains(toks, s)))"
-        ).alias("stop_hits"),
-        F.expr(f"IF(size(toks) >= 2, {bigrams}, array())").alias("bgs"),
+        F.expr(_GOPHER_STOP_HITS).alias("stop_hits"),
+        F.expr(_GOPHER_BIGRAMS).alias("bgs"),
     ).select(
         "doc_id", "n_words", "sum_len", "n_alpha_words", "stop_hits",
-        F.expr(top_cnt_fold).alias("top_cnt"),
+        F.expr(_GOPHER_TOP_FOLD).alias("top_cnt"),
         F.when(F.size("bgs") > 0, F.size("bgs")).alias("n_bigrams"),
     )
     mean_word_len = F.col("sum_len").cast("double") / F.col("n_words")
@@ -1951,10 +1962,8 @@ def curation_filter_funnel(spark, sf_dir):
         F.size("toks").alias("n_words"),
         F.expr("aggregate(toks, 0L, (a, x) -> a + length(x))").alias("sum_len"),
         F.expr("size(filter(toks, x -> x rlike '[a-z]'))").alias("n_alpha_words"),
-        F.expr(
-            f"size(filter(array({_SW_LIST_SQL}), s -> array_contains(toks, s)))"
-        ).alias("stop_hits"),
-        F.expr(f"IF(size(toks) >= 2, {_GOPHER_BIGRAMS}, array())").alias("bgs"),
+        F.expr(_GOPHER_STOP_HITS).alias("stop_hits"),
+        F.expr(_GOPHER_BIGRAMS).alias("bgs"),
     ).select(
         "doc_id", "fp", "n_words", "sum_len", "n_alpha_words", "stop_hits",
         F.expr(_GOPHER_TOP_FOLD).alias("top_cnt"),

@@ -754,9 +754,9 @@ def stream_quality_gate(spark, sf_dir):
     """
     from ..operators.text import (
         _GOPHER_BIGRAMS,
+        _GOPHER_STOP_HITS,
         _GOPHER_TOP_FOLD,
         _SPARK_WTOKS,
-        _SW_LIST_SQL,
     )
 
     from ..partitioning import estimated_splits as _estimated_splits
@@ -785,10 +785,8 @@ def stream_quality_gate(spark, sf_dir):
         F.size("toks").alias("n_words"),
         F.expr("aggregate(toks, 0L, (a, x) -> a + length(x))").alias("sum_len"),
         F.expr("size(filter(toks, x -> x rlike '[a-z]'))").alias("n_alpha_words"),
-        F.expr(
-            f"size(filter(array({_SW_LIST_SQL}), s -> array_contains(toks, s)))"
-        ).alias("stop_hits"),
-        F.expr(f"IF(size(toks) >= 2, {_GOPHER_BIGRAMS}, array())").alias("bgs"),
+        F.expr(_GOPHER_STOP_HITS).alias("stop_hits"),
+        F.expr(_GOPHER_BIGRAMS).alias("bgs"),
     ).select(
         "doc_id", "n_words", "sum_len", "n_alpha_words", "stop_hits",
         F.expr(_GOPHER_TOP_FOLD).alias("top_cnt"),
@@ -809,15 +807,17 @@ def stream_quality_gate(spark, sf_dir):
     )
     # keep goes through an explode(array(keep)) Generate BARRIER before the
     # filter: a plain .where(keep) is substituted through the projections
-    # by PushDownPredicates all the way into the parquet scan, and because
-    # higher-order functions are codegen-fallback the pushed battery
-    # evaluates interpreted with no subexpression elimination — the bigram
-    # lambda then re-tokenizes per element, O(n_tokens^2) per row on the
-    # source's single split (measured 16.6 s vs 1.5 s at sf0.1 for the
-    # identical result; rand()-guards don't help — the optimizer folds
-    # them and pushes the deterministic conjuncts anyway). Predicates
-    # cannot push through Generate, and its input is evaluated once per
-    # row, so the battery stays in the parallel, stacked-Project stage.
+    # by PushDownPredicates all the way into the scan, inlining the `toks`
+    # alias into every rule, and because higher-order functions are
+    # codegen-fallback the pushed battery evaluates interpreted with no
+    # subexpression elimination. No lambda body names `toks` (see
+    # operators/text.py), so that costs a fixed number of re-tokenizations
+    # per row, not one per token — but it still costs: at sf0.1 on 4 cores
+    # (tools/ab.py, 5 rounds, identical rows) the plain filter takes 3.1 s
+    # against 1.6 s behind the barrier. rand()-guards don't help — the
+    # optimizer folds them and pushes the deterministic conjuncts anyway.
+    # Predicates cannot push through Generate, and its input is evaluated
+    # once per row, so the battery stays in the stacked-Project stage.
     flagged = c.select(
         "doc_id",
         F.col("n_words").cast("int").alias("n_words"),

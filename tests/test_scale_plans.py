@@ -734,6 +734,44 @@ def test_gopher_rules_zero_shuffle(spark, sf_dir):
     assert "Generate" not in plan  # no explode fallback
 
 
+def _in_lambda_bodies(plan_json: str, cls: str) -> int:
+    """Count the expressions of class `cls` that sit inside a LambdaFunction
+    body anywhere in an optimized plan's toJSON (a LambdaFunction's first
+    child is its body, the rest are its argument variables)."""
+    from spark_sql_flow_plugin_spark.plans.catalyst import _expr_field, parse_plan_json
+
+    def count(e, in_body):
+        n = int(in_body and e.cls == cls)
+        for i, c in enumerate(e.children):
+            n += count(c, in_body or (e.cls == "LambdaFunction" and i == 0))
+        return n
+
+    return sum(
+        count(expr, False)
+        for node in parse_plan_json(plan_json).walk()
+        for value in node.raw.values()
+        for expr in _expr_field(value)
+    )
+
+
+def test_gopher_rules_filter_keeps_tokenizer_out_of_lambdas(spark, sf_dir):
+    # a consumer's filter on keep makes the optimizer inline the `toks`
+    # alias into every expression that reads it; a lambda body that names
+    # toks then re-tokenizes the document once per array element
+    # (O(n_words^2) per row). The tokenizer may only be copied into the
+    # array arguments of higher-order functions.
+    from pyspark.sql import functions as F
+
+    df = (
+        queries()["quality_gopher_rules"](spark, sf_dir)
+        .where(F.col("keep") == 1)
+        .select("doc_id")
+    )
+    plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
+    assert "StringSplit" in plan_json
+    assert _in_lambda_bodies(plan_json, "StringSplit") == 0
+
+
 def test_hard_negatives_bucketed_no_cartesian(spark, sf_dir):
     # candidates must come from the 256-bucket equi-join; label/vec_id
     # inequalities are post-join filters, never a nested-loop join
