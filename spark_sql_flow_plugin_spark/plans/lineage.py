@@ -149,8 +149,9 @@ def jvm_leaf_meta(leaf, raw: dict) -> tuple[str, dict[str, str]]:
 
 
 #: per-run fields of a raw JSON plan: expression ids (AggregateExpression
-#: keeps its own in ``resultId``), JVM object ids, qualifiers, metadata
-_UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata")
+#: keeps its own in ``resultId``; a catalog TempViewNode's ``_output``
+#: pairs names with them), JVM object ids, qualifiers, metadata
+_UNSTABLE_KEYS = ("exprId", "resultId", "jvmId", "qualifier", "metadata", "_output")
 
 
 def _strip_expr_ids(obj):

@@ -159,7 +159,7 @@ def _build_dag(spark, sf_dir, seed: int, use_perm: bool):
     )
     # cache stage (r14 verdict item #5): ~60% of seeds CACHE TABLE a
     # random TEMP stage — the live path that found the Spark-4
-    # lookupCachedData signature break (plans/catalog.py::_is_cached)
+    # lookupCachedData signature break (plans/catalog.py::_cache_lookup)
     cached = None
     temp_stages = [st for st in stages if "." not in st]
     if temp_stages and rng.random() < 0.6:

@@ -262,9 +262,11 @@ def test_plan_parses_once(spark, monkeypatch):
     assert project.exprs("projectList") is project.exprs("projectList")
 
     parsed: dict[int, int] = {}
+    kept = []  # holds each list, so no id is reused by a later one
     orig = catalyst.parse_plan_list
 
     def counting(flat):
+        kept.append(flat)
         parsed[id(flat)] = parsed.get(id(flat), 0) + 1
         return orig(flat)
 
